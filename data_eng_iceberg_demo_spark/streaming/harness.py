@@ -13,6 +13,13 @@ reproducible.
 Scale notes: these are the operators that carry 100 TB streaming loads —
 state lives in the state store keyed by the shuffle partitioning; watermark
 bounds state size; dropDuplicates state is similarly watermark-evicted.
+Every stream in this module runs in a child session whose
+state-partition count is worked out from its staged input's parquet
+footers (``_state_session``): one partition per
+``_STATE_ROWS_PER_PARTITION`` input rows, capped by the session's task
+slots — each partition is one state store, a fixed cost paid on every
+micro-batch.  Memory-sink streams drain through one runner,
+``_run_stream``.
 """
 
 from __future__ import annotations
@@ -30,6 +37,7 @@ from ..scratch import scratch_dir
 
 _counter = itertools.count()
 _events_src_cache: dict[str, str] = {}
+_raw_schema_cache: dict[tuple[str, str], object] = {}
 _staged_cache: dict[tuple[str, str], str] = {}
 
 
@@ -133,36 +141,115 @@ def _link_events(d: str, dstdir: str) -> None:
         os.symlink(src, os.path.join(dstdir, "events.parquet"))
 
 
-def _state_session(spark, n: int = 8):
-    """Child session sized for a stateful streaming query: each shuffle
-    partition owns one state-store instance, so partition count should
-    track key cardinality, not CPU count (the fixture streams have ~150
-    keys; a 100 TB stream sizes this up with its key space).  A
-    dedicated ``newSession`` (shared SparkContext, own SQLConf) keeps
-    the override invisible to the caller — the set/restore form left a
-    window where a concurrently planned query compiled under 8
-    partitions (the join_bloom_prefilter concurrency discipline)."""
+# Input rows per state-store partition.  Each shuffle partition of a
+# stateful stream owns one state store, and every micro-batch opens,
+# commits and snapshots all of them whether they hold rows or not, so
+# below this many rows a store costs more than the parallelism it adds.
+# Measured on stream_dedup_keyed (4-vCPU VM, task threads pinned to as
+# many CPUs, noop sink, medians of 6 interleaved runs, seconds):
+#   rows      threads  1 part  2 parts  4 parts  8 parts
+#   10,100    2        0.95    0.98     1.14     1.75
+#   10,100    4        0.86    0.87     1.04     -
+#   100,100   2        1.85    1.74     2.03     -
+#   100,100   4        1.62    1.48     1.42     1.68
+# 25k rows puts sf0.01 (10k events) at 1 partition and sf0.1 (100k) at
+# 4, capped to 2 on 2 threads: the fastest column in every row.  A
+# bytes rule would not do: sf0.1's input is 2 MB, so AQE's 64 MB
+# advisory size would pick 1 partition, the slow end at that scale.
+_STATE_ROWS_PER_PARTITION = 25_000
+
+
+def _footer_rows(src: str) -> int:
+    """Rows in every parquet file under the staged stream input ``src``,
+    summed from the footers with pyarrow — no Spark job.  Hidden and
+    underscore-prefixed files are skipped, as the file source skips
+    them.  A table-format source would read the same figure from its
+    manifests instead of opening each footer."""
+    import pyarrow.parquet as pq
+
+    rows = 0
+    for root, dirs, files in os.walk(src, followlinks=True):
+        dirs[:] = [x for x in dirs if not x.startswith((".", "_"))]
+        rows += sum(pq.read_metadata(os.path.join(root, f)).num_rows
+                    for f in files
+                    if f.endswith(".parquet")
+                    and not f.startswith((".", "_")))
+    return rows
+
+
+def _state_partitions(rows: int, slots: int) -> int:
+    """One state partition per ``_STATE_ROWS_PER_PARTITION`` input rows,
+    at least one, never more than the session's task slots."""
+    return max(1, min(slots, -(-rows // _STATE_ROWS_PER_PARTITION)))
+
+
+def _state_session(spark, src: str):
+    """Child session for a stream over the staged input dir ``src``.
+
+    Each shuffle partition of a stateful operator owns one state store,
+    and every micro-batch pays for every store, so the count follows
+    the input, not the CPU count: ``_state_partitions`` of the input's
+    footer row count, capped by ``defaultParallelism`` (see
+    ``_STATE_ROWS_PER_PARTITION`` for the rule's measured points).  Row
+    count bounds the key count from above — keyed dedup holds one key
+    per ``event_id``, 10,000 at sf0.01 and 100,000 at sf0.1.  A
+    checkpointed stream keeps the count it started with: Spark restores
+    it from the offset log on restart.  A dedicated ``newSession``
+    (shared SparkContext, own SQLConf) keeps the override invisible to
+    the caller — the set/restore form left a window where a concurrently
+    planned query compiled under the stream's partition count."""
     from ..session import ensure_session_defaults
 
     iso = spark.newSession()
     ensure_session_defaults(iso)
+    n = _state_partitions(_footer_rows(src),
+                          spark.sparkContext.defaultParallelism)
     iso.conf.set("spark.sql.shuffle.partitions", str(n))
     return iso
 
 
+def _run_stream(iso, df, mode: str = "append", name: str = "stream"):
+    """The one memory-sink runner: drain the stream ``df`` (built on the
+    session ``iso``) with an availableNow trigger and return the sink's
+    table."""
+    qname = f"{name}_{next(_counter)}"
+    q = (df.writeStream.format("memory").queryName(qname)
+         .outputMode(mode).trigger(availableNow=True).start())
+    q.awaitTermination()
+    return iso.table(qname)
+
+
+def _events_src(d: str) -> str:
+    """The fixture events as a flat stream-source dir of symlinks, one
+    per sf_dir, reused across queries in the process."""
+    path = _events_src_cache.get(d)
+    if path is None or not os.path.isdir(path):
+        path = scratch_dir("events_src_")
+        _link_events(d, path)
+        _events_src_cache[d] = path
+    return path
+
+
+def _raw_schema(spark, path: str):
+    """The raw file schema of a staged stream input, inferred once per
+    dir.  Staged inputs never change schema, but ``events.ts`` decodes
+    differently under ``nanosAsLong``, so the conf is part of the key."""
+    key = (path, spark.conf.get("spark.sql.legacy.parquet.nanosAsLong",
+                                "false"))
+    schema = _raw_schema_cache.get(key)
+    if schema is None:
+        schema = _raw_schema_cache[key] = spark.read.parquet(path).schema
+    return schema
+
+
 def _events_stream(spark, d, path=None, max_files=None):
     """readStream over the events parquet (schema from a batch peek of the
-    raw file — ts arrives as int64 nanos, converted to µs timestamp).
-    The file source wants a flat directory of files, so the fixture
-    (single file, or the member part files of a directory-shaped
+    raw file, cached per dir — ts arrives as int64 nanos, converted to µs
+    timestamp).  The file source wants a flat directory of files, so the
+    fixture (single file, or the member part files of a directory-shaped
     corpus) is symlinked into a scratch dir."""
     if path is None:
-        # one symlink dir per sf_dir, reused across queries in the process
-        path = _events_src_cache.get(d)
-        if path is None or not os.path.isdir(path):
-            path = scratch_dir("events_src_")
-            _link_events(d, path)
-            _events_src_cache[d] = path
+        path = _events_src(d)
     # ts may be TIMESTAMP(NANOS) in the fixture parquet; a session that
     # didn't set nanosAsLong at build time would otherwise fail this batch
     # schema peek with PARQUET_TYPE_ILLEGAL (reachable outside the registry
@@ -171,8 +258,7 @@ def _events_stream(spark, d, path=None, max_files=None):
     # TimestampType like sources.readers.load does.
     from ..session import ensure_session_defaults
     ensure_session_defaults(spark)
-    raw_schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(raw_schema)
+    reader = spark.readStream.schema(_raw_schema(spark, path))
     if max_files is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files))
     stream = reader.parquet(path)
@@ -218,15 +304,12 @@ def _replay_file(d: str, p: str, n: int = 100) -> None:
     pq.write_table(t.take(idx[:n]), os.path.join(p, "replay.parquet"))
 
 
-def run_stream_to_df(spark, d, build, name, output_mode="append", options=None):
+def run_stream_to_df(spark, d, build, name, output_mode="append"):
     """Run builder(stream_df) → memory sink with availableNow; return the
-    collected result table as a batch DataFrame."""
-    qname = f"{name}_{next(_counter)}"
-    stream = _events_stream(spark, d)
-    q = (build(stream).writeStream.format("memory").queryName(qname)
-         .outputMode(output_mode).trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.table(qname)
+    collected result table as a batch DataFrame.  The stream runs in a
+    child session sized from the events input."""
+    iso = _state_session(spark, _events_src(d))
+    return _run_stream(iso, build(_events_stream(iso, d)), output_mode, name)
 
 
 @register(
@@ -322,7 +405,7 @@ def stream_watermark_late(spark, d):
 
     src = os.path.join(_staged_input("wm_late_", d, _stage), "src")
     schema = day1.schema  # partitionBy strips `batch`: files hold e's cols
-    iso = _state_session(spark, 8)
+    iso = _state_session(spark, src)
     stream = (iso.readStream.schema(schema)
               .option("maxFilesPerTrigger", "1").parquet(src))
     agg = (stream.withWatermark("tss", "10 minutes")
@@ -330,11 +413,7 @@ def stream_watermark_late(spark, d):
            .agg(F.count("*").alias("cnt")))
     out = agg.select(F.col("w.start").cast("string").alias("window_start"),
                      "event_type", "cnt")
-    qname = f"wm_late_{next(_counter)}"
-    q = (out.writeStream.format("memory").queryName(qname)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return iso.table(qname)
+    return _run_stream(iso, out, "append", "wm_late")
 
 
 @register(
@@ -353,18 +432,14 @@ def stream_dedup_keyed(spark, d):
     tmp = _events_plus(spark, d, "dedup_keyed_",
                        lambda p: _replay_file(d, p))
 
-    iso = _state_session(spark, 8)
+    iso = _state_session(spark, tmp)
     stream = _events_stream(iso, d, path=tmp).select(
         "event_id", "event_type", "value",
         F.date_trunc("second", "ts").alias("tss"))
     deduped = (stream.withWatermark("tss", "1 hour")
                .dropDuplicates(["event_id"])
                .select("event_id", "event_type", F.round("value", 2).alias("value_r")))
-    qname = f"dedup_keyed_{next(_counter)}"
-    q = (deduped.writeStream.format("memory").queryName(qname)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return iso.table(qname)
+    return _run_stream(iso, deduped, "append", "dedup_keyed")
 
 
 @register(
@@ -414,17 +489,13 @@ def _stateful_running(spark, d, provider=None, tag="stateful_running"):
                             "total_value": [cents / 100.0 if nn
                                             else float("nan")]})
 
-    iso = _state_session(spark, 8)
+    iso = _state_session(spark, _events_src(d))
     if provider is not None:
         iso.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
     stream = _events_stream(iso, d).select("user_id", "value")
     result = stream.groupBy("user_id").applyInPandasWithState(
         update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout)
-    qname = f"{tag}_{next(_counter)}"
-    q = (result.writeStream.format("memory").queryName(qname)
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return iso.table(qname)
+    return _run_stream(iso, result, "update", tag)
 
 
 def stream_stateful_running(spark, d):
@@ -497,7 +568,7 @@ def stream_stream_join(spark, d):
     per-side files — the production shape, where views and clicks are
     routed out of a single firehose, and zero batch-write setup cost
     per run."""
-    iso = _state_session(spark, 8)
+    iso = _state_session(spark, _events_src(d))
     base = _events_stream(iso, d).select(
         "event_id", "user_id", "event_type",
         F.date_trunc("second", "ts").alias("tss"))
@@ -521,11 +592,7 @@ def stream_stream_join(spark, d):
         "view_id", "click_id", F.col("v_user").alias("user_id"),
         (F.unix_timestamp("c_tss") - F.unix_timestamp("v_tss"))
         .cast("bigint").alias("gap_s"))
-    qname = f"ss_join_{next(_counter)}"
-    q = (out.writeStream.format("memory").queryName(qname)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return iso.table(qname)
+    return _run_stream(iso, out, "append", "ss_join")
 
 
 @register(
@@ -559,7 +626,8 @@ def stream_foreach_batch_merge(spark, d):
         StructField("event_type", StringType()),
         StructField("value_r", DoubleType()),
     ])
-    cat = IceliteCatalog(spark, scratch_dir("fbm_tbl_"))
+    iso = _state_session(spark, src)
+    cat = IceliteCatalog(iso, scratch_dir("fbm_tbl_"))
     table = cat.create_table("db.events_upsert", schema)
 
     def merge_batch(batch_df, _batch_id):
@@ -567,7 +635,7 @@ def stream_foreach_batch_merge(spark, d):
                          key="event_id",
                          update_cols=["event_type", "value_r"])
 
-    stream = _events_stream(spark, d, path=src, max_files=1).select(
+    stream = _events_stream(iso, d, path=src, max_files=1).select(
         "event_id", "event_type", F.round("value", 2).alias("value_r"))
     q = (stream.writeStream.foreachBatch(merge_batch)
          .trigger(availableNow=True).start())
@@ -593,7 +661,7 @@ def stream_dedup_within_watermark(spark, d):
     tmp = _events_plus(spark, d, "dedup_wm_",
                        lambda p: _replay_file(d, p))
 
-    iso = _state_session(spark, 8)
+    iso = _state_session(spark, tmp)
     stream = _events_stream(iso, d, path=tmp).select(
         "event_id", "event_type", "value",
         F.date_trunc("second", "ts").alias("tss"))
@@ -601,11 +669,7 @@ def stream_dedup_within_watermark(spark, d):
                .dropDuplicatesWithinWatermark(["event_id"])
                .select("event_id", "event_type",
                        F.round("value", 2).alias("value_r")))
-    qname = f"dedup_wm_{next(_counter)}"
-    q = (deduped.writeStream.format("memory").queryName(qname)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return iso.table(qname)
+    return _run_stream(iso, deduped, "append", "dedup_wm")
 
 
 @register(
@@ -667,7 +731,7 @@ def stream_file_sink_exactly_once(spark, d):
     ckpt = scratch_dir("eo_ckpt_")
     os.link(_part(0), os.path.join(src, "00.parquet"))
 
-    iso = _state_session(spark, 8)
+    iso = _state_session(spark, staged)
     schema = "event_id long, event_type string, value double"
 
     def run_once():
@@ -784,7 +848,7 @@ def stream_pattern_match(spark, d):
                 "secs_to_convert": pd.Series(secs, dtype="int64"),
             })
 
-    iso = _state_session(spark, 8)
+    iso = _state_session(spark, _events_src(d))
     stream = (_events_stream(iso, d)
               .filter(F.col("ts").isNotNull())
               .select("user_id", "event_id", "event_type",
@@ -792,11 +856,7 @@ def stream_pattern_match(spark, d):
     result = stream.groupBy("user_id").applyInPandasWithState(
         update, out_schema, state_schema, "append",
         GroupStateTimeout.NoTimeout)
-    qname = f"pattern_match_{next(_counter)}"
-    q = (result.writeStream.format("memory").queryName(qname)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return iso.table(qname)
+    return _run_stream(iso, result, "append", "pattern_match")
 
 
 @register(
@@ -912,7 +972,7 @@ def stream_left_outer_join(spark, d):
             os.utime(dst, (base_m + 10 * (i + 1), base_m + 10 * (i + 1)))
 
     path = _events_plus(spark, d, "louter_join_", build)
-    iso = _state_session(spark, 8)
+    iso = _state_session(spark, path)
     base = (_events_stream(iso, d, path=path, max_files=1)
             .select("event_id", "user_id", "event_type",
                     F.date_trunc("second", "ts").alias("tss"))
@@ -939,11 +999,7 @@ def stream_left_outer_join(spark, d):
         "view_id", "click_id", F.col("v_user").alias("user_id"),
         (F.unix_timestamp("c_tss") - F.unix_timestamp("v_tss"))
         .cast("bigint").alias("gap_s"))
-    qname = f"louter_join_{next(_counter)}"
-    q = (out.writeStream.format("memory").queryName(qname)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return iso.table(qname)
+    return _run_stream(iso, out, "append", "louter_join")
 
 
 @register(
@@ -976,7 +1032,7 @@ def stream_complete_mode_topk(spark, d):
     so it is only sane for small aggregate outputs (leaderboards,
     counters) — exactly this shape; per-key large state belongs to
     update/append mode."""
-    iso = _state_session(spark, 8)
+    iso = _state_session(spark, _events_src(d))
     base = _events_stream(iso, d).filter(F.col("value").isNotNull())
     agg = (base.groupBy("event_type")
            .agg(F.count("*").alias("n"),
@@ -984,8 +1040,4 @@ def stream_complete_mode_topk(spark, d):
                 .alias("total_value"))
            .orderBy(F.col("total_value").desc(), "event_type")
            .limit(3))
-    qname = f"complete_topk_{next(_counter)}"
-    q = (agg.writeStream.format("memory").queryName(qname)
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return iso.table(qname)
+    return _run_stream(iso, agg, "complete", "complete_topk")

@@ -140,9 +140,9 @@ def stream_static_join(spark, d):
     the oracle — stream-static inner join semantics are identical)."""
     from .harness import run_stream_to_df
 
-    static_c = T(spark, d, "customer").select("c_custkey", "c_name", "c_mktsegment")
-
     def build(stream_df):
+        static_c = T(stream_df.sparkSession, d, "customer").select(
+            "c_custkey", "c_name", "c_mktsegment")
         return (stream_df
                 .filter(F.col("event_type").isin("purchase", "signup"))
                 .join(static_c, F.col("user_id") == F.col("c_custkey"))

@@ -10,7 +10,6 @@ hash-checked, not just row-counted.
 from __future__ import annotations
 
 import tempfile
-import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql.types import (DecimalType, IntegerType, LongType, StringType,
@@ -541,6 +540,8 @@ def stream_table_appends(spark, d):
     pipeline tails; the base corpus is never rescanned."""
     import os
 
+    from ..streaming.harness import _run_stream
+
     t = _fresh_table(spark, n_batches=3)
     meta = t.meta
     # snapshot-ordered file arrival: diff each snapshot against its parent
@@ -557,13 +558,12 @@ def stream_table_appends(spark, d):
             os.link(os.path.join(t.tdir, finfo["path"]), dst)
             os.utime(dst, (t0 + snap["id"], t0 + snap["id"]))
             idx += 1
+    # stateless and shuffle-free, so there is no partition count to size:
+    # the stream runs on the caller's session, sparing a child session's
+    # first-query cost (~35 ms)
     stream = (spark.readStream.schema(PEDIDOS_SCHEMA)
               .option("maxFilesPerTrigger", "1").parquet(src))
-    qname = f"tbl_appends_{uuid.uuid4().hex[:8]}"
-    q = (_as_output(stream).writeStream.format("memory").queryName(qname)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.table(qname)
+    return _run_stream(spark, _as_output(stream), "append", "tbl_appends")
 
 
 @register(

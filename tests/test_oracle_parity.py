@@ -269,8 +269,9 @@ def test_no_hash_query_is_vacuously_empty():
     sf0.01 up), llm_decontaminate (eval cut 10 had no sf0.1 overlap).
     Stride-gated by default (r17, window fit): fixtures are immutable
     between rounds, so the full 384x3 sweep runs under
-    SPARK_GRAFT_FULL_PARITY=1 (the pre-commit gate), a rotating quarter
-    per default run."""
+    SPARK_GRAFT_FULL_PARITY=1 (the pre-commit gate); a default run
+    checks a fixed quarter, every 4th name of the sorted list, the same
+    quarter every run (``sweep`` does not rotate)."""
     import os
 
     import duckdb
