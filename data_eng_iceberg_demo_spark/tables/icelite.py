@@ -32,6 +32,15 @@ it was written under; reads remap that version's names to current names
 (renames never rewrite files — the one place Parquet name-based resolution
 is insufficient, SURVEY.md §7.4).
 
+Change paths: every row change, delete file and snapshot goes through
+one primitive each.  _commit_snapshot is the only code that appends a
+snapshot, on main or on a branch, and it alone applies the conflict
+rule.  _carry_over returns the files and pruned delete entries that
+survive a file rewrite.  _write_position_deletes masks matched (file,
+pos) rows with one delete file.  _read_deletes reads delete files with
+their fixed (file_path, pos) schema, so no read infers it.
+delete_where and update_where share one body per mode (_row_change).
+
 Scale notes: metadata is O(snapshots + files) JSON — at warehouse scale
 this would shard into manifest files, but the commit protocol (write files,
 then atomically swap the metadata pointer) is the same one Iceberg uses.
@@ -48,6 +57,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 
@@ -58,11 +68,16 @@ from pyspark.sql.types import StructType
 _META = "metadata.json"
 _MANIFEST_DIR = "manifests"
 _LAZY_KEYS = ("files", "delete_files")
+# every icelite position-delete file has exactly this schema
+_DELETE_SCHEMA = "file_path string, pos bigint"
 
 
 class CommitConflict(RuntimeError):
-    """Another writer advanced the table between base-read and commit;
-    re-read the table and re-apply the operation."""
+    """Another writer changed the table between this operation's base
+    read and its commit: the on-disk snapshot set differs from the
+    base's, or other metadata changed (main's head, a branch or tag,
+    the schema, spec, properties or stats).  Re-read the table and
+    re-apply the operation."""
 
 
 class StaleSnapshotError(RuntimeError):
@@ -539,6 +554,15 @@ class IceliteTable:
                 return s
         raise ValueError(f"no snapshot {sid} (expired or never existed)")
 
+    def _head(self, meta: dict, branch: str | None = None) -> dict:
+        """Head snapshot of main, or of `branch`; an empty file set when
+        the head is unset (a fresh table or an empty branch)."""
+        sid = (meta["current_snapshot"] if branch is None
+               else meta["refs"][branch]["snapshot_id"])
+        if sid is None:
+            return {"files": [], "delete_files": []}
+        return self._snapshot(meta, sid)
+
     # a commit marker older than this with its snapshot still unpublished
     # is debris from a process that died between marker creation and the
     # metadata swap — reclaimable (tests shrink this to exercise the path)
@@ -551,9 +575,9 @@ class IceliteTable:
             return
         except FileExistsError:
             pass
-        # The marker exists but our parent check passed, so the claimant
-        # never published sid (a publish would have advanced
-        # current_snapshot and failed the parent check first).  Either it
+        # The marker exists but our conflict checks passed, so the
+        # claimant never published sid (a publish would have added sid
+        # to the snapshot set and failed those checks first).  Either it
         # is mid-commit (young marker -> genuine conflict) or it died
         # before the swap (stale marker -> reclaim, otherwise every
         # future same-base commit recomputes this sid and hits EEXIST
@@ -580,22 +604,42 @@ class IceliteTable:
                 f"marker") from None
 
     def _commit_snapshot(self, meta: dict, operation: str, files: list[dict],
-                         delete_files: list[dict] | None = None) -> dict:
-        """Commit with optimistic concurrency (the Iceberg protocol):
-        the new snapshot's parent must still be the table's current
-        snapshot at commit time.  If another writer committed since this
-        operation read its base metadata, raise CommitConflict — callers
-        re-read and re-apply (data files already written are orphans, to
-        be collected by expire_snapshots; they never corrupt the table
-        because only the metadata swap publishes them)."""
+                         delete_files: list[dict] | None = None,
+                         branch: str | None = None) -> dict:
+        """Publish a snapshot of `files` + `delete_files` as the new head
+        of main, or of `branch` (main untouched) — the only code that
+        appends to meta["snapshots"].
+
+        Optimistic concurrency (the Iceberg protocol): the commit
+        conflicts, raising CommitConflict, if since `meta` was read
+          * the on-disk snapshot set changed (another writer committed a
+            snapshot `meta` lacks, on any ref, or one of its snapshots
+            was expired), or
+          * any other metadata changed: main's head, a ref (the target
+            branch included), the schema, spec, properties or stats.
+        This commit rewrites the whole pointer file from `meta`, so
+        committing past either would silently revert the other change.
+        Callers re-read and re-apply.  Data files already written are
+        orphans, collected by remove_orphan_files; they never corrupt
+        the table because only the metadata swap publishes them."""
         on_disk = self.meta
-        if on_disk["current_snapshot"] != meta["current_snapshot"]:
+        ours = {s["id"] for s in meta["snapshots"]}
+        theirs = {s["id"] for s in on_disk["snapshots"]}
+        if theirs != ours:
             raise CommitConflict(
-                f"table advanced to snapshot {on_disk['current_snapshot']} "
-                f"while this commit was based on {meta['current_snapshot']}")
-        sid = (max((s["id"] for s in meta["snapshots"]), default=0)) + 1
-        # Atomic arbitration: the parent check above is read-compare-replace
-        # and two same-base writers can both pass it.  Both compute the same
+                f"table snapshots changed while this commit was in flight:"
+                f" {sorted(theirs - ours)} added, {sorted(ours - theirs)} "
+                f"expired")
+        moved = sorted(k for k in set(meta) | set(on_disk)
+                       if k != "snapshots" and meta.get(k) != on_disk.get(k))
+        if moved:
+            raise CommitConflict(
+                f"table {', '.join(moved)} changed while this commit was "
+                f"in flight (main head {meta['current_snapshot']} -> "
+                f"{on_disk['current_snapshot']})")
+        sid = max(ours, default=0) + 1
+        # Atomic arbitration: the checks above are read-compare-replace
+        # and two same-base writers can both pass them.  Both compute the same
         # next sid, so an O_CREAT|O_EXCL marker keyed by sid lets exactly one
         # proceed; the loser gets EEXIST -> CommitConflict before any
         # metadata is swapped (its data files stay unpublished orphans).
@@ -605,14 +649,17 @@ class IceliteTable:
         self._claim_marker(marker, sid)
         snap = {
             "id": sid,
-            "parent": meta["current_snapshot"],
+            "parent": self._head(meta, branch).get("id"),
             "ts": time.time(),
             "operation": operation,
             "files": files,
             "delete_files": delete_files or [],
         }
         meta["snapshots"].append(snap)
-        meta["current_snapshot"] = sid
+        if branch is None:
+            meta["current_snapshot"] = sid
+        else:
+            meta["refs"][branch]["snapshot_id"] = sid
         try:
             _write_meta(self.tdir, meta)
         except BaseException:
@@ -696,14 +743,17 @@ class IceliteTable:
         (file, pos) pairs in pre-existing files only."""
         meta = self.meta
         cols = self.current_columns(meta)
-        new_files = self._write_files(df.select(*cols), meta)
-        cur_files, cur_dels = [], []
-        if meta["current_snapshot"] is not None:
-            cur = self._snapshot(meta, None)
-            cur_files = cur["files"]
-            cur_dels = cur.get("delete_files", [])
-        self._commit_snapshot(meta, "append", cur_files + new_files,
-                              delete_files=cur_dels)
+        self._append(meta, self._write_files(df.select(*cols), meta))
+
+    def _append(self, meta: dict, new_files: list[dict],
+                branch: str | None = None) -> dict:
+        """Commit an 'append' snapshot on main (or `branch`): the head's
+        files and pending delete files carry over untouched, plus
+        `new_files`."""
+        head = self._head(meta, branch)
+        return self._commit_snapshot(
+            meta, "append", head["files"] + new_files,
+            delete_files=head.get("delete_files", []), branch=branch)
 
     def add_files(self, paths: list[str]) -> int:
         """Iceberg's ``CALL system.add_files`` / in-place migrate analog:
@@ -745,13 +795,7 @@ class IceliteTable:
                         "schema_version": meta["current_schema"],
                         "partition": None, "spec_key": None,
                         **_footer_entry(full, name_to_id)})
-        cur_files, cur_dels = [], []
-        if meta["current_snapshot"] is not None:
-            cur = self._snapshot(meta, None)
-            cur_files = cur["files"]
-            cur_dels = cur.get("delete_files", [])
-        self._commit_snapshot(meta, "append", cur_files + new,
-                              delete_files=cur_dels)
+        self._append(meta, new)
         return len(new)
 
     def set_property(self, key: str, value: str) -> None:
@@ -762,21 +806,42 @@ class IceliteTable:
         meta.setdefault("properties", {})[key] = value
         _write_meta(self.tdir, meta)
 
-    def _split_touched(self, files: list[dict], meta: dict,
-                       dels: list[dict], predicate: str):
-        """Partition the file list into (touched, kept) by whether any
-        live row matches `predicate` — ONE provenance scan over all
-        files (not one Spark job per file: a 100k-file table pays one
-        job, the classic copy-on-write planning scan)."""
+    def _touched_paths(self, files: list[dict], meta: dict,
+                       dels: list[dict], predicate: str) -> set[str]:
+        """Paths of the files holding a live row that matches
+        `predicate` — ONE provenance scan over all files (not one Spark
+        job per file: a 100k-file table pays one job, the classic
+        copy-on-write planning scan)."""
         matches = (self._read_files(files, meta, delete_files=dels,
                                     keep_pos=True)
                    .filter(F.expr(predicate))
                    .select("__file").distinct())
-        hit = set(self._rel_data_paths(
+        return set(self._rel_data_paths(
             [r["__file"] for r in matches.collect()]))
-        touched = [fi for fi in files if fi["path"] in hit]
-        kept = [fi for fi in files if fi["path"] not in hit]
-        return touched, kept
+
+    @staticmethod
+    def _carry_over(snap: dict, dropped: set[str]) -> tuple[list, list]:
+        """(kept files, pruned delete entries) when the `dropped` paths
+        leave `snap` in a rewrite.  Rewritten files had their pending
+        deletes applied during the rewrite, so each delete entry keeps
+        only targets that still exist, and an entry left with none
+        goes."""
+        kept = [f for f in snap["files"] if f["path"] not in dropped]
+        kept_paths = {f["path"] for f in kept}
+        kept_dels = []
+        for d in snap.get("delete_files", []):
+            targets = [t for t in d["targets"] if t in kept_paths]
+            if targets:
+                kept_dels.append(IceliteTable._prune_delete_entry(d, targets))
+        return kept, kept_dels
+
+    @staticmethod
+    def _is_mor(mode: str, op: str) -> bool:
+        if mode in ("merge-on-read", "mor"):
+            return True
+        if mode in ("copy-on-write", "cow"):
+            return False
+        raise ValueError(f"unknown {op} mode: {mode}")
 
     def delete_where(self, predicate: str,
                      mode: str | None = None) -> None:
@@ -793,69 +858,7 @@ class IceliteTable:
 
         mode=None resolves the table property ``write.delete.mode``
         (Iceberg's own switch), defaulting to copy-on-write."""
-        if mode is None:
-            mode = (self.meta.get("properties") or {}).get(
-                "write.delete.mode", "copy-on-write")
-        if mode in ("merge-on-read", "mor"):
-            return self._delete_where_mor(predicate)
-        if mode not in ("copy-on-write", "cow"):
-            raise ValueError(f"unknown delete mode: {mode}")
-        meta = self.meta
-        cur = self._snapshot(meta, None)
-        cur_dels = cur.get("delete_files", [])
-        touched, kept = self._split_touched(cur["files"], meta, cur_dels,
-                                            predicate)
-        if not touched:
-            self._commit_snapshot(meta, "delete", list(cur["files"]),
-                                  delete_files=cur_dels)
-            return
-        survivors = (self._read_files(touched, meta, delete_files=cur_dels)
-                     .filter(~F.expr(predicate)))
-        new_files = self._write_files(survivors, meta)
-        # delete entries keep only targets that still exist; rewritten
-        # files had their pending deletes applied during the rewrite
-        kept_paths = {f["path"] for f in kept}
-        kept_dels = []
-        for d in cur_dels:
-            targets = [t for t in d["targets"] if t in kept_paths]
-            if targets:
-                kept_dels.append(self._prune_delete_entry(d, targets))
-        self._commit_snapshot(meta, "delete", kept + new_files,
-                              delete_files=kept_dels)
-
-    def _delete_where_mor(self, predicate: str) -> None:
-        """Merge-on-read DELETE: one distributed scan computes matching
-        row positions via the parquet reader's `_metadata.row_index`
-        (already-deleted rows are anti-joined out first, so delete files
-        never double-count); the positions land in a position delete
-        file and data files are not touched."""
-        meta = self.meta
-        cur = self._snapshot(meta, None)
-        cur_dels = cur.get("delete_files", [])
-        matches = (self._read_files(cur["files"], meta,
-                                    delete_files=cur_dels, keep_pos=True)
-                   .filter(F.expr(predicate))
-                   .select(F.col("__file").alias("file_path"),
-                           F.col("__pos").alias("pos")))
-        batch = uuid.uuid4().hex[:12]
-        out_rel = os.path.join("deletes", batch)
-        out = os.path.join(self.tdir, out_rel)
-        # delete sets are small relative to data (and bounded by the
-        # matched rows); one file keeps the read-side join input compact
-        matches.coalesce(1).write.mode("overwrite").parquet(out)
-        written = self.spark.read.parquet(out)
-        targets = self._rel_data_paths(
-            [r["file_path"] for r in
-             written.select("file_path").distinct().collect()])
-        if not targets:  # nothing matched: no-op snapshot, drop the file
-            import shutil
-            shutil.rmtree(out, ignore_errors=True)
-            self._commit_snapshot(meta, "delete", list(cur["files"]),
-                                  delete_files=cur_dels)
-            return
-        entry = self._delete_entry(out_rel, out, targets)
-        self._commit_snapshot(meta, "delete", list(cur["files"]),
-                              delete_files=cur_dels + [entry])
+        self._row_change("delete", predicate, None, mode)
 
     @staticmethod
     def _assigned(df: DataFrame, assignments: dict[str, str],
@@ -896,74 +899,87 @@ class IceliteTable:
 
         mode=None resolves the table property ``write.update.mode``
         (Iceberg's switch), defaulting to copy-on-write."""
-        if mode is None:
-            mode = (self.meta.get("properties") or {}).get(
-                "write.update.mode", "copy-on-write")
-        if mode in ("merge-on-read", "mor"):
-            return self._update_where_mor(predicate, assignments)
-        if mode not in ("copy-on-write", "cow"):
-            raise ValueError(f"unknown update mode: {mode}")
+        self._row_change("update", predicate, assignments, mode)
+
+    def _row_change(self, op: str, predicate: str,
+                    assignments: dict[str, str] | None,
+                    mode: str | None) -> None:
+        """The one body of DELETE (assignments=None) and UPDATE; the two
+        differ only in the row transform.  A predicate that matches no
+        row still commits a no-op snapshot.
+
+        * copy-on-write: one provenance scan finds the touched files,
+          which are rewritten with the transform applied; the rest carry
+          over (_carry_over).
+        * merge-on-read: one scan finds matching (file, pos) pairs via
+          the parquet reader's `_metadata.row_index` (already-deleted
+          rows are anti-joined out first, so delete files never
+          double-count); they land in a position delete file, and an
+          UPDATE appends the updated rows in the same commit."""
         meta = self.meta
+        if mode is None:
+            mode = (meta.get("properties") or {}).get(
+                f"write.{op}.mode", "copy-on-write")
+        mor = self._is_mor(mode, op)
         cur = self._snapshot(meta, None)
-        cur_dels = cur.get("delete_files", [])
-        touched, kept = self._split_touched(cur["files"], meta, cur_dels,
-                                            predicate)
-        if not touched:
-            self._commit_snapshot(meta, "update", list(cur["files"]),
-                                  delete_files=cur_dels)
+        dels = cur.get("delete_files", [])
+        if mor:
+            matches = (self._read_files(cur["files"], meta,
+                                        delete_files=dels, keep_pos=True)
+                       .filter(F.expr(predicate)))
+            entry = self._write_position_deletes(matches)
+            new_files = []
+            if entry is not None and assignments is not None:
+                # matched rows are already filtered, so assignments apply
+                # unconditionally; re-evaluating `matches` is safe because
+                # the scan is a deterministic parquet read of an immutable
+                # snapshot
+                cols = self.current_columns(meta)
+                new_files = self._write_files(
+                    self._assigned(matches.select(*cols), assignments), meta)
+            self._commit_snapshot(meta, op, cur["files"] + new_files,
+                                  delete_files=dels + ([entry] if entry
+                                                       else []))
             return
-        rewritten = self._assigned(
-            self._read_files(touched, meta, delete_files=cur_dels),
-            assignments, when=F.expr(predicate))
-        new_files = self._write_files(rewritten, meta)
-        # same delete-entry pruning as copy-on-write DELETE: rewritten
-        # files had their pending deletes applied during the rewrite
-        kept_paths = {f["path"] for f in kept}
-        kept_dels = []
-        for d in cur_dels:
-            targets = [t for t in d["targets"] if t in kept_paths]
-            if targets:
-                kept_dels.append(self._prune_delete_entry(d, targets))
-        self._commit_snapshot(meta, "update", kept + new_files,
+        touched = self._touched_paths(cur["files"], meta, dels, predicate)
+        if not touched:
+            self._commit_snapshot(meta, op, cur["files"], delete_files=dels)
+            return
+        kept, kept_dels = self._carry_over(cur, touched)
+        rows = self._read_files([f for f in cur["files"]
+                                 if f["path"] in touched],
+                                meta, delete_files=dels)
+        if assignments is None:
+            rows = rows.filter(~F.expr(predicate))
+        else:
+            rows = self._assigned(rows, assignments, when=F.expr(predicate))
+        self._commit_snapshot(meta, op, kept + self._write_files(rows, meta),
                               delete_files=kept_dels)
 
-    def _update_where_mor(self, predicate: str,
-                          assignments: dict[str, str]) -> None:
-        """Merge-on-read UPDATE: one scan finds matching (file, pos)
-        pairs; their old versions go into a position delete file and the
-        updated rows append as a new data file, in a single commit."""
-        meta = self.meta
-        cur = self._snapshot(meta, None)
-        cur_dels = cur.get("delete_files", [])
-        matches = (self._read_files(cur["files"], meta,
-                                    delete_files=cur_dels, keep_pos=True)
-                   .filter(F.expr(predicate)))
-        batch = uuid.uuid4().hex[:12]
-        out_rel = os.path.join("deletes", batch)
+    def _write_position_deletes(self, matches: DataFrame) -> dict | None:
+        """Write the (__file, __pos) rows of `matches` as ONE position
+        delete file — delete sets are small relative to data (bounded
+        by the matched rows), and one file keeps the read-side join
+        input compact.  Returns its manifest entry, or None (and no
+        file) when no row matched."""
+        out_rel = os.path.join("deletes", uuid.uuid4().hex[:12])
         out = os.path.join(self.tdir, out_rel)
         (matches.select(F.col("__file").alias("file_path"),
                         F.col("__pos").alias("pos"))
          .coalesce(1).write.mode("overwrite").parquet(out))
-        written = self.spark.read.parquet(out)
         targets = self._rel_data_paths(
-            [r["file_path"] for r in
-             written.select("file_path").distinct().collect()])
-        if not targets:  # nothing matched: no-op snapshot, drop the file
-            import shutil
+            [r["file_path"] for r in self._read_deletes([out_rel])
+             .select("file_path").distinct().collect()])
+        if not targets:
             shutil.rmtree(out, ignore_errors=True)
-            self._commit_snapshot(meta, "update", list(cur["files"]),
-                                  delete_files=cur_dels)
-            return
-        cols = self.current_columns(meta)
-        # matched rows are already filtered, so assignments apply
-        # unconditionally; re-evaluating `matches` is safe because the
-        # scan is a deterministic parquet read of an immutable snapshot
-        updated = self._assigned(matches.select(*cols), assignments)
-        new_files = self._write_files(updated, meta)
-        entry = self._delete_entry(out_rel, out, targets)
-        self._commit_snapshot(meta, "update",
-                              list(cur["files"]) + new_files,
-                              delete_files=cur_dels + [entry])
+            return None
+        return self._delete_entry(out_rel, out, targets)
+
+    def _read_deletes(self, paths: list[str]) -> DataFrame:
+        """Read icelite position-delete files (table-relative paths)
+        with their fixed schema: no footer-inference job."""
+        return self.spark.read.schema(_DELETE_SCHEMA).parquet(
+            *[os.path.join(self.tdir, p) for p in paths])
 
     def _delete_entry(self, out_rel: str, out: str,
                       targets: list[str]) -> dict:
@@ -1045,37 +1061,9 @@ class IceliteTable:
         index).  The delete side is O(deleted rows) — tiny next to data —
         so Spark broadcasts it at runtime; no hint (policy: the delete
         set grows with delete volume, not boundedly)."""
-        dels = self.spark.read.parquet(
-            *[os.path.join(self.tdir, p) for p in del_paths])
+        dels = self._read_deletes(del_paths)
         cond = (df["__file"] == dels["file_path"]) & (df["__pos"] == dels["pos"])
         return df.join(dels, cond, "left_anti")
-
-    def _read_one(self, finfo: dict, meta: dict,
-                  delete_files: list[dict] | None = None) -> DataFrame:
-        """Read one data file, remapping its write-time schema (by field
-        id) to the current schema: renamed fields resolve, later-added
-        fields fill NULL (README.md:276,292 semantics).  Pending position
-        deletes targeting the file are subtracted."""
-        cur_fields = self._schema_fields(meta, meta["current_schema"])
-        old_fields = {f["id"]: f for f in
-                      self._schema_fields(meta, finfo["schema_version"])}
-        df = self.spark.read.parquet(os.path.join(self.tdir, finfo["path"]))
-        del_paths = [d["path"] for d in (delete_files or [])
-                     if finfo["path"] in d["targets"]]
-        cols = []
-        for f in cur_fields:
-            old = old_fields.get(f["id"])
-            if old is not None:
-                cols.append(F.col(old["name"]).alias(f["name"]))
-            else:
-                cols.append(F.lit(None).cast(f["type"]).alias(f["name"]))
-        if not del_paths:
-            return df.select(*cols)
-        staged = df.select(*cols,
-                           F.col("_metadata.file_path").alias("__file"),
-                           F.col("_metadata.row_index").alias("__pos"))
-        return self._apply_deletes(staged, del_paths) \
-            .drop("__file", "__pos")
 
     def _read_files(self, files: list[dict], meta: dict,
                     delete_files: list[dict] | None = None,
@@ -1164,9 +1152,8 @@ class IceliteTable:
                 raise ValueError(
                     f"no snapshot at or before timestamp {as_of_ts}")
             version = max(eligible, key=lambda s: (s["ts"], s["id"]))["id"]
-        if meta["current_snapshot"] is None and version is None:
-            return self._read_files([], meta)
-        snap = self._snapshot(meta, version)
+        snap = (self._head(meta) if version is None
+                else self._snapshot(meta, version))
         return self._read_files(snap["files"], meta,
                                 delete_files=snap.get("delete_files"))
 
@@ -1228,8 +1215,7 @@ class IceliteTable:
         partitions hold a prefix range — the filter finishes)."""
         meta = self.meta
         spec = meta["partition_spec"]
-        dels = (self._snapshot(meta, None).get("delete_files")
-                if meta["current_snapshot"] is not None else None)
+        dels = self._head(meta).get("delete_files")
         df = self._read_files(self.plan_files_value(value), meta,
                               delete_files=dels)
         if spec is not None:
@@ -1242,8 +1228,7 @@ class IceliteTable:
         """Read with hidden-partition pruning + the residual row filter on
         the source column (user never references the partition column)."""
         meta = self.meta
-        dels = (self._snapshot(meta, None).get("delete_files")
-                if meta["current_snapshot"] is not None else None)
+        dels = self._head(meta).get("delete_files")
         df = self._read_files(self.plan_files(ts_lo, ts_hi), meta,
                               delete_files=dels)
         spec = meta["partition_spec"]
@@ -1285,8 +1270,7 @@ class IceliteTable:
     def scan_range(self, col: str, lo=None, hi=None) -> DataFrame:
         """Stats-pruned read + residual row filter: `lo <= col <= hi`."""
         meta = self.meta
-        dels = (self._snapshot(meta, None).get("delete_files")
-                if meta["current_snapshot"] is not None else None)
+        dels = self._head(meta).get("delete_files")
         df = self._read_files(self.plan_files_range(col, lo, hi), meta,
                               delete_files=dels)
         if lo is not None:
@@ -1611,7 +1595,6 @@ class IceliteTable:
                        for d in s.get("delete_files", [])})
 
         dead_paths = paths_of(expired) - paths_of(keep)
-        import shutil
         for p in dead_paths:
             full = os.path.join(self.tdir, p)
             if os.path.isdir(full):  # position-delete files are dirs
@@ -1664,7 +1647,6 @@ class IceliteTable:
                           for d in s.get("delete_files", [])}
         del_root = os.path.join(self.tdir, "deletes")
         if os.path.isdir(del_root):
-            import shutil
             for n in os.listdir(del_root):
                 rel = os.path.join("deletes", n)
                 if rel not in del_referenced:
@@ -1744,11 +1726,9 @@ class IceliteTable:
                             f"(ANSI MERGE cardinality violation)")
             finally:
                 dup.unpersist()
-        if mode in ("merge-on-read", "mor"):
+        if self._is_mor(mode, "merge"):
             return self._merge_into_mor(source, key, update_cols,
                                         not_matched_by_source)
-        if mode not in ("copy-on-write", "cow"):
-            raise ValueError(f"unknown merge mode: {mode}")
         meta = self.meta
         cols = self.current_columns(meta)
         # Presence tags, NOT key/value nullability, decide which arm a
@@ -1803,23 +1783,14 @@ class IceliteTable:
         is_matched = is_target & F.col(f"__s_{key}").isNotNull()
         masked = joined.filter(
             is_target if not_matched_by_source == "delete" else is_matched)
-        batch = uuid.uuid4().hex[:12]
-        out_rel = os.path.join("deletes", batch)
-        out = os.path.join(self.tdir, out_rel)
         # distinct(): duplicate MATCHED source keys (reachable via the
         # check_cardinality=False escape hatch) fan one target row out
         # to several joined rows — writing the same (file, pos) twice
         # would make the delete file's record_count overcount and
         # metadata_count() silently undercount (reads stay correct,
         # masking dedupes; the COUNT pushdown would not)
-        (masked.select(F.col("__file").alias("file_path"),
-                       F.col("__pos").alias("pos"))
-         .distinct()
-         .coalesce(1).write.mode("overwrite").parquet(out))
-        written = self.spark.read.parquet(out)
-        targets = self._rel_data_paths(
-            [r["file_path"] for r in
-             written.select("file_path").distinct().collect()])
+        entry = self._write_position_deletes(
+            masked.select("__file", "__pos").distinct())
         # updated matched rows + source-only inserts re-enter as appends
         updated = joined.filter(is_matched).select(*[
             (F.col(f"__s_{c}") if c in update_cols else F.col(c)).alias(c)
@@ -1827,16 +1798,9 @@ class IceliteTable:
         inserts = (joined.filter(~is_target)
                    .select(*[F.col(f"__s_{c}").alias(c) for c in cols]))
         new_files = self._write_files(updated.unionByName(inserts), meta)
-        files = list(cur["files"]) + new_files
-        if targets:
-            entry = self._delete_entry(out_rel, out, targets)
-            self._commit_snapshot(meta, "merge", files,
-                                  delete_files=cur_dels + [entry])
-        else:
-            import shutil
-            shutil.rmtree(out, ignore_errors=True)
-            self._commit_snapshot(meta, "merge", files,
-                                  delete_files=cur_dels)
+        self._commit_snapshot(meta, "merge", cur["files"] + new_files,
+                              delete_files=cur_dels + ([entry] if entry
+                                                       else []))
 
     def drop_column(self, name: str) -> None:
         """Metadata-only DROP COLUMN: the field leaves the current schema;
@@ -2010,8 +1974,7 @@ class IceliteTable:
         current snapshot — the orphan/GC and storage-accounting view
         (r11 verdict task 5)."""
         meta = self.meta
-        live = ({f["path"] for f in self._snapshot(meta, None)["files"]}
-                if meta.get("current_snapshot") is not None else set())
+        live = {f["path"] for f in self._head(meta)["files"]}
         seen: dict[str, tuple] = {}
         for s in sorted(meta["snapshots"], key=lambda x: x["id"]):
             for f in s["files"]:
@@ -2072,30 +2035,17 @@ class IceliteTable:
 
     def write_to_branch(self, branch: str, df: DataFrame) -> None:
         """Append a snapshot visible ONLY on the branch (main readers are
-        unaffected) — the write half of write-audit-publish.  Optimistic
-        concurrency applies per branch head, exactly like main commits."""
+        unaffected) — the write half of write-audit-publish.  It commits
+        through _commit_snapshot like every main commit, so a main
+        commit landing mid-flight is a CommitConflict, not a silent
+        revert."""
         meta = self.meta
         ref = meta.get("refs", {}).get(branch)
         if ref is None or ref["type"] != "branch":
             raise ValueError(f"no branch: {branch}")
         cols = self.current_columns(meta)
-        new_files = self._write_files(df.select(*cols), meta)
-        base_files, base_dels = [], []
-        if ref["snapshot_id"] is not None:
-            base = self._snapshot(meta, ref["snapshot_id"])
-            base_files = base["files"]
-            base_dels = base.get("delete_files", [])
-        on_disk = self.meta.get("refs", {}).get(branch)
-        if on_disk is None or on_disk["snapshot_id"] != ref["snapshot_id"]:
-            raise CommitConflict(
-                f"branch {branch} advanced while this commit was in flight")
-        sid = max((s["id"] for s in meta["snapshots"]), default=0) + 1
-        meta["snapshots"].append({
-            "id": sid, "parent": ref["snapshot_id"], "ts": time.time(),
-            "operation": "append", "files": base_files + new_files,
-            "delete_files": list(base_dels)})
-        meta["refs"][branch]["snapshot_id"] = sid
-        _write_meta(self.tdir, meta)
+        self._append(meta, self._write_files(df.select(*cols), meta),
+                     branch=branch)
 
     def fast_forward(self, branch: str) -> None:
         """Publish half of WAP: point main at the branch head.  Allowed
@@ -2150,20 +2100,13 @@ class IceliteTable:
         base_files = (by_id[snap["parent"]]["files"]
                       if snap["parent"] is not None else [])
         added, _removed = _diff_entries(base_files, snap["files"])
-        cur_files, cur_dels = [], []
-        if meta["current_snapshot"] is not None:
-            cur = self._snapshot(meta, None)
-            cur_files = cur["files"]
-            cur_dels = cur.get("delete_files", [])
         dup = sorted({f["path"] for f in added}
-                     & {f["path"] for f in cur_files})
+                     & {f["path"] for f in self._head(meta)["files"]})
         if dup:
             raise ValueError(
                 f"cherrypick: files already published on the current "
                 f"snapshot: {dup[:3]}")
-        new = self._commit_snapshot(meta, "append", cur_files + added,
-                                    delete_files=cur_dels)
-        return new["id"]
+        return self._append(meta, added)["id"]
 
     def position_deletes_df(self, version: int | None = None) -> DataFrame:
         """position_deletes metadata table (Iceberg's
@@ -2177,21 +2120,17 @@ class IceliteTable:
         meta = self.meta
         snap = self._snapshot(meta, version)
         dels = snap.get("delete_files", [])
-        cur_fields = self._schema_fields(meta, meta["current_schema"])
-        row_cols = [f["name"] for f in cur_fields]
         if not dels:
-            schema = ", ".join(f"`{f['name']}` {f['type']}"
-                               for f in cur_fields)
-            return self.spark.createDataFrame([], schema)
-        del_df = self.spark.read.parquet(
-            *[os.path.join(self.tdir, d["path"]) for d in dels])
+            return self._read_files([], meta)
+        del_df = self._read_deletes([d["path"] for d in dels])
         targeted = sorted({t for d in dels for t in d["targets"]})
         by_path = {f["path"]: f for f in snap["files"]}
         files = [by_path[p] for p in targeted if p in by_path]
         data = self._read_files(files, meta, keep_pos=True)
         cond = ((data["__file"] == del_df["file_path"])
                 & (data["__pos"] == del_df["pos"]))
-        return data.join(del_df, cond, "inner").select(*row_cols)
+        return (data.join(del_df, cond, "inner")
+                .select(*self.current_columns(meta)))
 
     def rewrite_small_files(self, min_records: int,
                             target_files: int = 1) -> int:
@@ -2214,17 +2153,10 @@ class IceliteTable:
                  or f["record_count"] < min_records]
         if len(small) < 2:
             return 0
-        small_paths = {f["path"] for f in small}
-        kept_files = [f for f in snap["files"]
-                      if f["path"] not in small_paths]
-        kept_paths = {f["path"] for f in kept_files}
-        all_dels = snap.get("delete_files", [])
-        kept_dels = []
-        for dd in all_dels:
-            targets = [t for t in dd["targets"] if t in kept_paths]
-            if targets:
-                kept_dels.append(self._prune_delete_entry(dd, targets))
-        df = self._read_files(small, meta, delete_files=all_dels)
+        kept_files, kept_dels = self._carry_over(
+            snap, {f["path"] for f in small})
+        df = self._read_files(small, meta,
+                              delete_files=snap.get("delete_files", []))
         new_files = self._write_files(df.repartition(target_files), meta)
         self._commit_snapshot(meta, "replace", kept_files + new_files,
                               delete_files=kept_dels)
@@ -2280,24 +2212,20 @@ class IceliteTable:
         if len(dels) < 2:
             return 0
         live = {f["path"] for f in cur["files"]}
-        paths = [os.path.join(self.tdir, dd["path"]) for dd in dels]
-        rows = self.spark.read.parquet(*paths)
+        rows = self._read_deletes([dd["path"] for dd in dels])
         # liveness is decided per distinct TARGET FILE (bounded by the
         # snapshot's file count — metadata-sized), never per delete row
         abs_targets = [r["file_path"] for r in
                        rows.select("file_path").distinct().collect()]
-        rel_of = dict(zip(abs_targets, self._rel_data_paths(abs_targets)))
-        live_abs = [a for a, rel in rel_of.items() if rel in live]
-        merged = (rows.filter(F.col("file_path").isin(live_abs))
-                  .select("file_path", "pos").distinct())
-        batch = uuid.uuid4().hex[:12]
-        out_rel = os.path.join("deletes", batch)
-        out = os.path.join(self.tdir, out_rel)
-        merged.coalesce(1).write.mode("overwrite").parquet(out)
-        targets = sorted({rel_of[a] for a in live_abs})
-        entry = self._delete_entry(out_rel, out, targets)
-        self._commit_snapshot(meta, "replace", list(cur["files"]),
-                              delete_files=[entry])
+        live_abs = [a for a, rel in zip(abs_targets,
+                                        self._rel_data_paths(abs_targets))
+                    if rel in live]
+        entry = self._write_position_deletes(
+            rows.filter(F.col("file_path").isin(live_abs))
+            .select(F.col("file_path").alias("__file"),
+                    F.col("pos").alias("__pos")).distinct())
+        self._commit_snapshot(meta, "replace", cur["files"],
+                              delete_files=[entry] if entry else [])
         return len(dels)
 
     def rewrite_data_files(self, target_files: int = 1,
@@ -2331,26 +2259,14 @@ class IceliteTable:
         kept_files: list[dict] = []
         kept_dels: list[dict] = []
         if where_range is not None:
-            col, lo, hi = where_range
-            selected = self.plan_files_range(col, lo, hi)
-            sel_paths = {f["path"] for f in selected}
-            snap = self._snapshot(meta, None)
-            kept_files = [f for f in snap["files"]
-                          if f["path"] not in sel_paths]
-            kept_paths = {f["path"] for f in kept_files}
-            all_dels = snap.get("delete_files", [])
-            # prune dangling targets (their files were rewritten with
-            # deletes applied) and invalidate the shrunk entries' row
-            # counts — a kept count over a pruned list would make
-            # metadata_count subtract rows that no longer exist
-            kept_dels = []
-            for d in all_dels:
-                targets = [t for t in d["targets"] if t in kept_paths]
-                if targets:
-                    kept_dels.append(self._prune_delete_entry(d, targets))
+            selected = self.plan_files_range(*where_range)
             if not selected:  # nothing to rewrite: no-op
                 return
-            df = self._read_files(selected, meta, delete_files=all_dels)
+            snap = self._snapshot(meta, None)
+            kept_files, kept_dels = self._carry_over(
+                snap, {f["path"] for f in selected})
+            df = self._read_files(selected, meta,
+                                  delete_files=snap.get("delete_files", []))
         else:
             df = self.read()
         if zorder_by:
@@ -2414,9 +2330,7 @@ class IceliteTable:
         export."""
         meta = self.meta
         name = full_name or meta["table"]
-        snap = (self._snapshot(meta, None)
-                if meta["current_snapshot"] is not None
-                else {"files": [], "delete_files": []})
+        snap = self._head(meta)
         if snap.get("delete_files"):
             raise ValueError(
                 "current snapshot has merge-on-read delete files; run "
@@ -2466,7 +2380,6 @@ class IceliteTable:
         if on_disk <= current:
             src_dir = data_root
         else:
-            import shutil
             src_dir = os.path.join(self.tdir, "export_stage",
                                    f"snap-{meta['current_snapshot']}")
             shutil.rmtree(src_dir, ignore_errors=True)

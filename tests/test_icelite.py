@@ -476,6 +476,84 @@ def test_failed_commit_releases_marker(spark, table, monkeypatch):
     assert table.meta["current_snapshot"] == snap["id"]
 
 
+@pytest.mark.parametrize("stale", ["branch", "main"])
+def test_branch_and_main_commits_race_without_loss(spark, tmp_path,
+                                                   monkeypatch, stale):
+    """A branch write and a main insert race: one handle's write lands
+    its data files, then a second handle commits on the other ref
+    before the first commits.  The stale side must raise
+    CommitConflict in both directions (a commit that rewrote the
+    metadata from its stale base would drop the rival's snapshot and
+    reuse its id), and a retry then lands with every snapshot kept."""
+    from data_eng_iceberg_demo_spark.tables.icelite import (CommitConflict,
+                                                            IceliteTable)
+
+    t = IceliteCatalog(spark, str(tmp_path)).create_table(
+        "db.race", spark.createDataFrame([], "x int").schema)
+
+    def ints(x):
+        return spark.createDataFrame([(x,)], "x int")
+
+    t.insert(ints(1))
+    t.create_branch("b")
+    other = IceliteTable(spark, t.tdir)
+    if stale == "branch":
+        def stale_op():
+            t.write_to_branch("b", ints(3))
+
+        def rival_op():
+            other.insert(ints(2))
+    else:
+        def stale_op():
+            t.insert(ints(2))
+
+        def rival_op():
+            other.write_to_branch("b", ints(3))
+
+    write_files = t._write_files
+
+    def racing_write(df, meta):
+        files = write_files(df, meta)
+        rival_op()  # the rival commits while these files are unpublished
+        return files
+
+    monkeypatch.setattr(t, "_write_files", racing_write)
+    with pytest.raises(CommitConflict):
+        stale_op()
+    monkeypatch.undo()
+    stale_op()  # re-read and re-apply
+
+    meta = IceliteTable(spark, t.tdir).meta
+    assert sorted(s["id"] for s in meta["snapshots"]) == [1, 2, 3]
+    assert sorted(r.x for r in t.read().collect()) == [1, 2]
+    assert sorted(r.x for r in t.read(ref="b").collect()) == [1, 3]
+
+
+@pytest.mark.parametrize("change", [
+    lambda t: t.add_column("extra", "int"),
+    lambda t: t.set_property("write.delete.mode", "merge-on-read"),
+    lambda t: t.create_tag("v1"),
+], ids=["add_column", "set_property", "create_tag"])
+def test_commit_conflicts_on_concurrent_metadata_change(spark, tmp_path,
+                                                        change):
+    """A commit rewrites the whole pointer file from its base, so a
+    metadata-only change made by another handle after that base was
+    read must fail the commit instead of being silently reverted."""
+    from data_eng_iceberg_demo_spark.tables.icelite import (CommitConflict,
+                                                            IceliteTable)
+
+    t = IceliteCatalog(spark, str(tmp_path)).create_table(
+        "db.meta", PEDIDOS_SCHEMA)
+    t._commit_snapshot(t.meta, "append", [])
+    stale = t.meta
+    change(IceliteTable(spark, t.tdir))
+    changed = {k: v for k, v in t.meta.items() if k != "snapshots"}
+    with pytest.raises(CommitConflict):
+        t._commit_snapshot(stale, "append", [])
+    assert {k: v for k, v in t.meta.items() if k != "snapshots"} == changed
+    t._commit_snapshot(t.meta, "append", [])  # a fresh base commits
+
+
 def test_partitions_metadata_from_manifest_only(spark, tmp_path):
     """partitions() answers per-partition file/record counts from manifest
     entries: record_count sums to the table's row count, one file per day

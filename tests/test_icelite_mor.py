@@ -95,6 +95,49 @@ def test_mor_delete_no_double_count(spark, tmp_path):
     assert len(t.meta["snapshots"][-1]["delete_files"]) == 1
 
 
+def test_delete_files_read_without_schema_inference(spark, tmp_path):
+    """Delete files have a fixed (file_path, pos) schema, so no read of
+    one may run a footer-inference job.  Jobs are counted the way
+    perfbench's Tracer counts them: a job whose stages include a
+    ``parquet at`` stage (a schema inference or a parquet write).  On a
+    one-file table a plain read runs `a` such jobs (data-file
+    inference, 0 once data schemas come from metadata).  A merge-on-read
+    delete plus a read then runs at most 2a + 1: the delete's matching
+    scan, its one delete-file write, and the read's scan.  Each
+    inferred delete-file read would add one more."""
+    sc = spark.sparkContext
+    jst = sc._jsc.sc().statusTracker()
+
+    def parquet_jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        n = 0
+        for j in jst.getJobIdsForGroup(group):
+            info = jst.getJobInfo(j)
+            stages = [jst.getStageInfo(s) for s in info.get().stageIds()]
+            n += any(s.isDefined() and s.get().name().startswith("parquet at")
+                     for s in stages)
+        return n
+
+    cat = IceliteCatalog(spark, str(tmp_path))
+    t = cat.create_table("db.pin", PEDIDOS_SCHEMA)
+    t.insert(_typed_pedidos(spark).coalesce(1))
+    assert len(t.meta["snapshots"][-1]["files"]) == 1
+    group = f"icelite-pin-{os.getpid()}-{id(t)}"
+    a = parquet_jobs(group + "-plain", lambda: t.read().collect())
+
+    def mor_delete_then_read():
+        t.delete_where("uf = 'SP'", mode="merge-on-read")
+        assert t.read().filter("uf = 'SP'").count() == 0
+
+    b = parquet_jobs(group + "-mor", mor_delete_then_read)
+    assert len(t.meta["snapshots"][-1]["delete_files"]) == 1
+    assert b <= 2 * a + 1, (a, b)
+
+
 def test_cow_after_mor_applies_pending_deletes(spark, tmp_path):
     t = _fresh(spark, tmp_path, "db.mixed")
     expect = _rows(t.read().filter("uf NOT IN ('SP','RJ')"))
