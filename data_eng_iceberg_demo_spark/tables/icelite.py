@@ -32,14 +32,16 @@ it was written under; reads remap that version's names to current names
 (renames never rewrite files — the one place Parquet name-based resolution
 is insufficient, SURVEY.md §7.4).
 
-Change paths: every row change, delete file and snapshot goes through
-one primitive each.  _commit_snapshot is the only code that appends a
-snapshot, on main or on a branch, and it alone applies the conflict
-rule.  _carry_over returns the files and pruned delete entries that
-survive a file rewrite.  _write_position_deletes masks matched (file,
-pos) rows with one delete file.  _read_deletes reads delete files with
-their fixed (file_path, pos) schema, so no read infers it.
-delete_where and update_where share one body per mode (_row_change).
+Change paths: every row change, delete file, snapshot and pointer
+write goes through one primitive each.  _publish alone rewrites the
+pointer file after create_table, and alone applies the conflict rule:
+the pointer's metadata_version must still be the base's.
+_commit_snapshot alone appends a snapshot, on main or on a branch.
+_carry_over returns the files and pruned delete entries that survive a
+file rewrite.  _write_position_deletes masks matched (file, pos) rows
+with one delete file.  _read_deletes reads delete files with their
+fixed (file_path, pos) schema, so no read infers it.  delete_where and
+update_where share one body per mode (_row_change).
 
 Scale notes: metadata is O(snapshots + files) JSON — at warehouse scale
 this would shard into manifest files, but the commit protocol (write files,
@@ -73,11 +75,10 @@ _DELETE_SCHEMA = "file_path string, pos bigint"
 
 
 class CommitConflict(RuntimeError):
-    """Another writer changed the table between this operation's base
-    read and its commit: the on-disk snapshot set differs from the
-    base's, or other metadata changed (main's head, a branch or tag,
-    the schema, spec, properties or stats).  Re-read the table and
-    re-apply the operation."""
+    """Another writer published between this operation's base read and
+    its publish (the pointer's metadata_version moved, or a concurrent
+    publish holds the commit marker) — any change counts, a manifest
+    re-encoding included.  Re-read the table and re-apply."""
 
 
 class StaleSnapshotError(RuntimeError):
@@ -88,9 +89,10 @@ class StaleSnapshotError(RuntimeError):
     because it materialized every list at load time; the lazy decoder
     trades that for O(snapshots) loads and surfaces the race here
     instead of a bare ``FileNotFoundError``.  Recovery: reload
-    ``table.meta`` (or re-open the table) for a fresh, consistent view —
-    internal flows are safe because maintenance ops resolve every list
-    they touch *before* rewriting the pointer."""
+    ``table.meta`` (or re-open the table) for a fresh, consistent view.
+    A stale handle can never publish its view back: every maintenance
+    op bumps the pointer's metadata_version, so a publish from the
+    older base raises CommitConflict."""
 
 
 def _footer_stats(path: str, name_to_id: dict[str, int]) -> dict:
@@ -320,9 +322,9 @@ class _LazySnap(dict):
     load (and thus every commit) replay ~10^9 list entries on the
     driver.  Operators keep the flat {files, delete_files} contract;
     only consumers that genuinely touch a snapshot's file set pay its
-    chain replay.  The lists must be materialized before a maintenance
-    op deletes manifests (expire_snapshots resolves what it needs
-    before rewriting the pointer, so internal flows are safe)."""
+    chain replay.  A list first read after a maintenance op deleted
+    its manifests raises StaleSnapshotError; the version check in
+    _publish keeps such a stale view from ever being published."""
 
     def __init__(self, header: dict, tbl: "IceliteTable",
                  chain: dict, inline: dict):
@@ -563,9 +565,9 @@ class IceliteTable:
             return {"files": [], "delete_files": []}
         return self._snapshot(meta, sid)
 
-    # a commit marker older than this with its snapshot still unpublished
-    # is debris from a process that died between marker creation and the
-    # metadata swap — reclaimable (tests shrink this to exercise the path)
+    # a publish holds its marker for one pointer write, so a marker older
+    # than this is debris from a process that died mid-publish —
+    # reclaimable (tests shrink this to exercise the path)
     STALE_MARKER_SECONDS = 300.0
 
     def _claim_marker(self, marker: str, sid: int) -> None:
@@ -575,17 +577,14 @@ class IceliteTable:
             return
         except FileExistsError:
             pass
-        # The marker exists but our conflict checks passed, so the
-        # claimant never published sid (a publish would have added sid
-        # to the snapshot set and failed those checks first).  Either it
-        # is mid-commit (young marker -> genuine conflict) or it died
-        # before the swap (stale marker -> reclaim, otherwise every
-        # future same-base commit recomputes this sid and hits EEXIST
-        # forever — the hard-kill wedge from the r3 advice).
+        # Another publish holds the marker (young -> genuine conflict) or
+        # died before releasing it (stale -> reclaim, otherwise every
+        # future same-base publish hits EEXIST forever — the hard-kill
+        # wedge from the r3 advice).
         try:
             age = time.time() - os.path.getmtime(marker)
         except OSError:
-            age = None  # vanished: owner just released or published
+            age = None  # vanished: its owner just released it
         if age is not None and age < self.STALE_MARKER_SECONDS:
             raise CommitConflict(
                 f"snapshot {sid} already claimed by a concurrent writer")
@@ -603,50 +602,52 @@ class IceliteTable:
                 f"snapshot {sid} re-claimed while reclaiming a stale "
                 f"marker") from None
 
+    def _publish(self, meta: dict, sid: int | None = None) -> None:
+        """Swap the pointer file to `meta` — the only pointer write after
+        create_table, so every operation shares Iceberg's commit rule:
+        swap only if the base did not move.  It claims
+        `.commits/commit-<sid>` (sid: the base's next snapshot id, by
+        default one past the highest in `meta`), so same-base writers
+        race for one O_CREAT|O_EXCL name; then checks the on-disk
+        metadata_version (absent = 0) still equals `meta`'s, else
+        CommitConflict; then writes `meta` with the version bumped, and
+        always releases the marker.  Every publish bumps the version, so
+        any change since the base read conflicts, a manifest re-encoding
+        included.  Claiming before checking makes the release safe: a
+        same-base writer claiming after the release sees the bump."""
+        if sid is None:
+            sid = max((s["id"] for s in meta["snapshots"]), default=0) + 1
+        markers = os.path.join(self.tdir, ".commits")
+        os.makedirs(markers, exist_ok=True)
+        marker = os.path.join(markers, f"commit-{sid}")
+        self._claim_marker(marker, sid)
+        try:
+            with open(os.path.join(self.tdir, _META)) as f:
+                on_disk = json.load(f).get("metadata_version", 0)
+            base = meta.get("metadata_version", 0)
+            if on_disk != base:
+                raise CommitConflict(
+                    f"table metadata moved from version {base} to "
+                    f"{on_disk} while this operation was in flight")
+            meta["metadata_version"] = base + 1
+            _write_meta(self.tdir, meta)
+        finally:
+            try:
+                os.unlink(marker)
+            except OSError:
+                pass
+
     def _commit_snapshot(self, meta: dict, operation: str, files: list[dict],
                          delete_files: list[dict] | None = None,
                          branch: str | None = None) -> dict:
         """Publish a snapshot of `files` + `delete_files` as the new head
         of main, or of `branch` (main untouched) — the only code that
-        appends to meta["snapshots"].
-
-        Optimistic concurrency (the Iceberg protocol): the commit
-        conflicts, raising CommitConflict, if since `meta` was read
-          * the on-disk snapshot set changed (another writer committed a
-            snapshot `meta` lacks, on any ref, or one of its snapshots
-            was expired), or
-          * any other metadata changed: main's head, a ref (the target
-            branch included), the schema, spec, properties or stats.
-        This commit rewrites the whole pointer file from `meta`, so
-        committing past either would silently revert the other change.
-        Callers re-read and re-apply.  Data files already written are
-        orphans, collected by remove_orphan_files; they never corrupt
-        the table because only the metadata swap publishes them."""
-        on_disk = self.meta
-        ours = {s["id"] for s in meta["snapshots"]}
-        theirs = {s["id"] for s in on_disk["snapshots"]}
-        if theirs != ours:
-            raise CommitConflict(
-                f"table snapshots changed while this commit was in flight:"
-                f" {sorted(theirs - ours)} added, {sorted(ours - theirs)} "
-                f"expired")
-        moved = sorted(k for k in set(meta) | set(on_disk)
-                       if k != "snapshots" and meta.get(k) != on_disk.get(k))
-        if moved:
-            raise CommitConflict(
-                f"table {', '.join(moved)} changed while this commit was "
-                f"in flight (main head {meta['current_snapshot']} -> "
-                f"{on_disk['current_snapshot']})")
-        sid = max(ours, default=0) + 1
-        # Atomic arbitration: the checks above are read-compare-replace
-        # and two same-base writers can both pass them.  Both compute the same
-        # next sid, so an O_CREAT|O_EXCL marker keyed by sid lets exactly one
-        # proceed; the loser gets EEXIST -> CommitConflict before any
-        # metadata is swapped (its data files stay unpublished orphans).
-        markers = os.path.join(self.tdir, ".commits")
-        os.makedirs(markers, exist_ok=True)
-        marker = os.path.join(markers, f"commit-{sid}")
-        self._claim_marker(marker, sid)
+        appends to meta["snapshots"].  It publishes through _publish, so
+        it raises CommitConflict if anything changed since `meta` was
+        read; callers re-read and re-apply.  Data files already written
+        are orphans, collected by remove_orphan_files; they never corrupt
+        the table because only the pointer swap publishes them."""
+        sid = max((s["id"] for s in meta["snapshots"]), default=0) + 1
         snap = {
             "id": sid,
             "parent": self._head(meta, branch).get("id"),
@@ -660,17 +661,7 @@ class IceliteTable:
             meta["current_snapshot"] = sid
         else:
             meta["refs"][branch]["snapshot_id"] = sid
-        try:
-            _write_meta(self.tdir, meta)
-        except BaseException:
-            # release the claim: a failed metadata swap must not wedge the
-            # table (every future same-base commit recomputes this sid and
-            # would hit EEXIST forever)
-            try:
-                os.unlink(marker)
-            except OSError:
-                pass
-            raise
+        self._publish(meta, sid)
         return snap
 
     # ------------------------------------------------------------ write path
@@ -804,7 +795,7 @@ class IceliteTable:
         when no explicit mode is passed."""
         meta = self.meta
         meta.setdefault("properties", {})[key] = value
-        _write_meta(self.tdir, meta)
+        self._publish(meta)
 
     def _touched_paths(self, files: list[dict], meta: dict,
                        dels: list[dict], predicate: str) -> set[str]:
@@ -1332,37 +1323,36 @@ class IceliteTable:
                                               F.lit("delete"))))
 
     # ------------------------------------------------------------ evolution
+    def _publish_schema(self, meta: dict, fields: list[dict]) -> None:
+        """Make `fields` the next schema version, current, and publish —
+        the one body behind add/rename/drop column."""
+        meta["current_schema"] += 1
+        meta["schema_versions"].append(
+            {"version": meta["current_schema"], "fields": fields})
+        self._publish(meta)
+
     def add_column(self, name: str, sql_type: str) -> None:
         """Metadata-only ADD COLUMN; existing rows read NULL
         (README.md:269-276)."""
         meta = self.meta
-        fields = [dict(f) for f in
-                  self._schema_fields(meta, meta["current_schema"])]
+        fields = self._schema_fields(meta, meta["current_schema"])
         if any(f["name"] == name for f in fields):
             raise ValueError(f"column exists: {name}")
-        fields.append({"id": meta["next_field_id"], "name": name, "type": sql_type})
+        new = {"id": meta["next_field_id"], "name": name, "type": sql_type}
         meta["next_field_id"] += 1
-        meta["schema_versions"].append(
-            {"version": meta["current_schema"] + 1, "fields": fields})
-        meta["current_schema"] += 1
-        _write_meta(self.tdir, meta)
+        self._publish_schema(meta, fields + [new])
 
     def rename_column(self, old: str, new: str) -> None:
         """Metadata-only RENAME via field id — zero data files touched
         (README.md:282-292)."""
         meta = self.meta
-        fields = [dict(f) for f in
-                  self._schema_fields(meta, meta["current_schema"])]
-        hit = [f for f in fields if f["name"] == old]
-        if not hit:
+        fields = self._schema_fields(meta, meta["current_schema"])
+        if not any(f["name"] == old for f in fields):
             raise ValueError(f"no column: {old}")
         if any(f["name"] == new for f in fields):
             raise ValueError(f"column exists: {new}")
-        hit[0]["name"] = new
-        meta["schema_versions"].append(
-            {"version": meta["current_schema"] + 1, "fields": fields})
-        meta["current_schema"] += 1
-        _write_meta(self.tdir, meta)
+        self._publish_schema(meta, [{**f, "name": new} if f["name"] == old
+                                    else f for f in fields])
 
     _TIME_TRANSFORMS = ("days", "months", "years", "hours")
 
@@ -1403,7 +1393,7 @@ class IceliteTable:
             if all(self._spec_key(h) != self._spec_key(old) for h in hist):
                 hist.append(old)
         meta["partition_spec"] = new_spec
-        _write_meta(self.tdir, meta)
+        self._publish(meta)
 
     def set_partition_days(self, source_col: str,
                            partition_name: str = "p_day") -> None:
@@ -1435,7 +1425,7 @@ class IceliteTable:
                                 "source_ids": [fields[c] for c in cols],
                                 "target_files": int(target_files)}
                                if cols else None)
-        _write_meta(self.tdir, meta)
+        self._publish(meta)
 
     def _order_cols(self, meta: dict) -> list[str]:
         """Current column names of the write order, resolved by field
@@ -1567,14 +1557,20 @@ class IceliteTable:
         with open(os.path.join(mdir, mf), "w") as f:
             json.dump(body, f)
         cur["_manifest"], cur["_manifest_base"] = mf, None
-        _write_meta(self.tdir, meta)
+        self._publish(meta)
         return depth
 
     def expire_snapshots(self, older_than_ts: float | None = None,
                          retain_last: int = 1) -> list[int]:
         """Retention (README.md:319-322): drop snapshots older than the
-        cutoff, always retaining the most recent `retain_last` and the
-        current snapshot; orphaned data files are deleted from disk."""
+        cutoff, always retaining the most recent `retain_last` (>= 1, as
+        Iceberg's retainLast: the newest snapshot must survive or the
+        next commit would reuse its id) and every ref's snapshot.  The
+        shrunk pointer is published first; only then are the data files
+        no survivor references deleted, so a conflicting publish leaves
+        every file in place."""
+        if retain_last < 1:
+            raise ValueError(f"retain_last must be >= 1, got {retain_last}")
         meta = self.meta
         snaps = sorted(meta["snapshots"], key=lambda s: s["id"])
         keep_ids = {s["id"] for s in snaps[-retain_last:]}
@@ -1586,25 +1582,26 @@ class IceliteTable:
         expired = [s for s in snaps
                    if s["id"] not in keep_ids
                    and (older_than_ts is None or s["ts"] < older_than_ts)]
-        expired_ids = [s["id"] for s in expired]
-        keep = [s for s in snaps if s["id"] not in set(expired_ids)]
+        if expired:
+            gone = {s["id"] for s in expired}
+            keep = [s for s in snaps if s["id"] not in gone]
 
-        def paths_of(snap_list):
-            return ({f["path"] for s in snap_list for f in s["files"]}
-                    | {d["path"] for s in snap_list
-                       for d in s.get("delete_files", [])})
+            def paths_of(snap_list):
+                return ({f["path"] for s in snap_list for f in s["files"]}
+                        | {d["path"] for s in snap_list
+                           for d in s.get("delete_files", [])})
 
-        dead_paths = paths_of(expired) - paths_of(keep)
-        for p in dead_paths:
-            full = os.path.join(self.tdir, p)
-            if os.path.isdir(full):  # position-delete files are dirs
-                shutil.rmtree(full, ignore_errors=True)
-            elif os.path.exists(full):
-                os.remove(full)
-        meta["snapshots"] = keep
-        _write_meta(self.tdir, meta)
+            dead_paths = paths_of(expired) - paths_of(keep)
+            meta["snapshots"] = keep
+            self._publish(meta)
+            for p in dead_paths:
+                full = os.path.join(self.tdir, p)
+                if os.path.isdir(full):  # position-delete files are dirs
+                    shutil.rmtree(full, ignore_errors=True)
+                elif os.path.exists(full):
+                    os.remove(full)
         self._gc_manifests()
-        return expired_ids
+        return [s["id"] for s in expired]
 
     def _gc_manifests(self) -> list[str]:
         """Delete manifest files referenced by no snapshot header in the
@@ -1806,15 +1803,10 @@ class IceliteTable:
         """Metadata-only DROP COLUMN: the field leaves the current schema;
         data files keep the bytes, reads never project them."""
         meta = self.meta
-        fields = [dict(f) for f in
-                  self._schema_fields(meta, meta["current_schema"])]
+        fields = self._schema_fields(meta, meta["current_schema"])
         if not any(f["name"] == name for f in fields):
             raise ValueError(f"no column: {name}")
-        fields = [f for f in fields if f["name"] != name]
-        meta["schema_versions"].append(
-            {"version": meta["current_schema"] + 1, "fields": fields})
-        meta["current_schema"] += 1
-        _write_meta(self.tdir, meta)
+        self._publish_schema(meta, [f for f in fields if f["name"] != name])
 
     def rollback_to_snapshot(self, snapshot_id: int) -> None:
         """Roll the table back to an earlier snapshot's file list — a new
@@ -2010,7 +2002,7 @@ class IceliteTable:
         if snapshot_id is not None:
             self._snapshot(meta, snapshot_id)  # must exist
         refs[name] = {"type": kind, "snapshot_id": snapshot_id}
-        _write_meta(self.tdir, meta)
+        self._publish(meta)
 
     def create_tag(self, name: str, snapshot_id: int | None = None) -> None:
         """Immutable named pointer to a snapshot (Iceberg tag): the
@@ -2031,7 +2023,7 @@ class IceliteTable:
         if name not in meta.get("refs", {}):
             raise ValueError(f"no ref: {name}")
         del meta["refs"][name]
-        _write_meta(self.tdir, meta)
+        self._publish(meta)
 
     def write_to_branch(self, branch: str, df: DataFrame) -> None:
         """Append a snapshot visible ONLY on the branch (main readers are
@@ -2065,7 +2057,7 @@ class IceliteTable:
                 f"main is not an ancestor of branch {branch}: not a "
                 f"fast-forward")
         meta["current_snapshot"] = ref["snapshot_id"]
-        _write_meta(self.tdir, meta)
+        self._publish(meta)
 
     def cherrypick_snapshot(self, snapshot_id: int) -> int:
         """Iceberg's ``CALL system.cherrypick_snapshot`` analog: apply
@@ -2174,7 +2166,7 @@ class IceliteTable:
         stats = _analyze_columns(self, columns)
         meta = self.meta
         meta.setdefault("statistics", []).append(stats)
-        _write_meta(self.tdir, meta)
+        self._publish(meta)
         return stats
 
     def column_stats_df(self):
