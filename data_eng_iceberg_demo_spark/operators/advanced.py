@@ -361,11 +361,15 @@ def join_bucketed_colocated(spark, d):
     side — bucket layout IS the shuffle, paid once at write time and
     amortized over every later join on that key.  This is the layout
     discipline that turns the 100 TB fact-fact join from a per-query
-    shuffle into a local merge (plan asserted in tests/test_plans.py)."""
-    import tempfile
+    shuffle into a local merge (plan asserted in tests/test_plans.py).
+    Bucketed scans need ``spark.sql.sources.bucketing.enabled``, so the
+    query is built on a ``session.child_session`` carrying it: a caller
+    that turned bucketing off keeps it off."""
+    from ..session import child_session
 
     n_buckets = 8
-    spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
+    spark = child_session(
+        spark, {"spark.sql.sources.bucketing.enabled": "true"})
     wh = scratch_dir("bucketed_wh_")
     o_tbl, c_tbl = "bkt_orders", "bkt_customer"
     for tbl in (o_tbl, c_tbl):
@@ -685,24 +689,17 @@ def join_bloom_prefilter(spark, d):
     (10 GiB) assumes cluster-scale scans that local fixtures never
     reach, and autoBroadcastJoinThreshold is disabled so the join keeps
     the shuffle form the rule targets (with a broadcastable dim Spark
-    would — correctly — just broadcast).  The whole query is built in a
-    DEDICATED child session (``spark.newSession()``: same SparkContext
-    and cached data, own SQLConf), so the overrides never exist in the
-    caller's session — a query another thread plans concurrently can
-    no longer compile under them (the r5 ADVICE race);
+    would — correctly — just broadcast).  The whole query is built on a
+    ``session.child_session`` carrying both overrides, so they never
+    exist in the caller's session — a query another thread plans
+    concurrently can no longer compile under them;
     tests/test_plans.py pins might_contain over the lineitem scan."""
-    from ..session import ensure_session_defaults
+    from ..session import child_session
 
-    iso = spark.newSession()
-    ensure_session_defaults(iso)
-    # carry the caller's parallelism profile into the child (runtime
-    # confs don't cross newSession; builder-time ones do)
-    for k in ("spark.sql.shuffle.partitions",
-              "spark.sql.adaptive.enabled"):
-        iso.conf.set(k, spark.conf.get(k))
-    iso.conf.set("spark.sql.optimizer.runtime.bloomFilter."
-                 "applicationSideScanSizeThreshold", "0")
-    iso.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    iso = child_session(spark, {
+        "spark.sql.optimizer.runtime.bloomFilter."
+        "applicationSideScanSizeThreshold": "0",
+        "spark.sql.autoBroadcastJoinThreshold": "-1"})
     li = T(iso, d, "lineitem")
     o = (T(iso, d, "orders")
          .filter(F.col("o_orderdate").between("1995-01-01", "1995-03-31")))

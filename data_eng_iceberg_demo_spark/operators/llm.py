@@ -1138,42 +1138,33 @@ _CLUSTER_EDGE_CTE = """
 """
 
 
-def _cc_loop_partitions(n_edges: int, caller_parts) -> str:
-    """Size the CC loop's shuffle partitions from the edge count that
-    _cc_bidir materialized (its checkpointed directed frame's count × 2
-    — the canonical way callers obtain both the loop input and this
-    figure): dup subgraphs are tiny on healthy corpora, where a small
-    floor bounds per-round task overhead, but a mass-dup corpus makes
-    the edge frame the round's real payload (r16 100x probe: 11.2M
-    directed edges ran 4x core-starved at the previously pinned 8).
-    One partition per ~500k edges, floor 8, never above the caller's
-    own conf (the caller cap WINS over the floor — a deliberately tiny
-    session must not be out-parallelized by the loop)."""
-    return str(min(int(caller_parts), max(8, n_edges // 500_000 + 1)))
-
-
 # directed-edge count below which the CC loop is LATENCY-bound rather
 # than data-bound: the per-round frames are O(dup nodes) ≤ 2×edges rows,
 # so under this bound every stage is a handful of KB and the round cost
 # is stage scheduling, not work (r17 interleaved A/B at sf0.1 with 180
 # edges: 8 parts + AQE ≈ 2.03 s/loop vs 2 parts + AQE-off ≈ 1.55 s).
-# 500k directed edges ≈ the same knee _cc_loop_partitions already uses.
+# Above it, _cc_loop_conf gives one partition per 500k edges.
 _CC_TINY_EDGES = 500_000
 
 
 def _cc_loop_conf(iso, n_edges: int, caller_parts) -> None:
-    """Size the CC loop's child session from the MATERIALIZED edge count
-    (scale-adaptive, never a local-core constant): tiny dup subgraphs
-    run the per-round label frames at 2 partitions with AQE OFF — each
-    round is 4-6 tiny stages whose cost is scheduling latency, and
-    adaptive re-planning only adds to it — while real edge volumes keep
-    AQE on (runtime coalescing/skew handling matter there) and the
-    one-partition-per-~500k-edges formula.  The caller restores its own
-    partitions AND re-enables AQE after the loop (the closing attach
-    join is corpus-sized)."""
+    """Size the CC loop's child session from the edge count that
+    _cc_bidir MATERIALIZED (scale-adaptive, never a local-core
+    constant): tiny dup subgraphs run the per-round label frames at 2
+    partitions with AQE OFF — each round is 4-6 tiny stages whose cost
+    is scheduling latency, and adaptive re-planning only adds to it.
+    Real edge volumes keep AQE on (runtime coalescing/skew handling
+    matter there) and take one partition per ~500k edges, floor 8: a
+    mass-dup corpus makes the edge frame the round's real payload (r16
+    100x probe: 11.2M directed edges ran 4x core-starved at a pinned
+    8).  The caller's own partition count caps it — a deliberately tiny
+    session must not be out-parallelized by the loop.
+    _canonical_components restores the child's inherited confs after
+    the loop (the closing attach join is corpus-sized)."""
     tiny = n_edges < _CC_TINY_EDGES
-    iso.conf.set("spark.sql.shuffle.partitions",
-                 "2" if tiny else _cc_loop_partitions(n_edges, caller_parts))
+    parts = 2 if tiny else min(int(caller_parts),
+                               max(8, n_edges // 500_000 + 1))
+    iso.conf.set("spark.sql.shuffle.partitions", str(parts))
     iso.conf.set("spark.sql.adaptive.enabled", str(not tiny).lower())
 
 
@@ -1190,7 +1181,7 @@ def _cc_bidir(edges):
     is O(dup pairs) either way, and the two direction selects are
     narrow maps over the checkpoint blocks.  Returns
     ``(bidir, directed_edge_count)``; the count is a cheap
-    checkpoint-block scan the callers feed to _cc_loop_partitions."""
+    checkpoint-block scan the callers feed to _cc_loop_conf."""
     a, b = edges.columns
     ck = edges.localCheckpoint(eager=True)
     bidir = (ck.select(F.col(a).alias("src"), F.col(b).alias("dst"))
@@ -1217,8 +1208,8 @@ def _min_label_propagation(bidir, max_iter: int):
     the ONE loop — the convergence rule (labels are monotone
     non-increasing, so the label SUM strictly decreases until the
     fixpoint; an O(1)-output aggregate detects it without joining old
-    labels against new) must never drift between edge domains.  The
-    caller owns session isolation and the 8-partition loop conf.
+    labels against new) must never drift between edge domains.
+    _canonical_components owns the child session and the loop conf.
 
     Each round is neighbor-min propagation PLUS a pointer-jumping
     shortcut (node's label drops to its label's label — the classic
@@ -1327,52 +1318,40 @@ def llm_dedup_clusters(spark, d, max_iter: int = 20):
     shape) and is the piece that turns O(pairs) near-dup output into an
     O(docs) keep-list at 100 TB.
 
-    The iteration runs in a DEDICATED child session (``newSession``:
-    shared SparkContext, own SQLConf) dropped to 8 shuffle partitions
-    AFTER the corpus-sized edge build checkpoints — per-round task
-    overhead, not data volume, bounds iterative CC on the tiny label
-    frames — so the caller's session conf is never touched (the
-    join_bloom_prefilter concurrency discipline)."""
-    from ..session import ensure_session_defaults
+    The edge build and the loop run through
+    :func:`_canonical_components`."""
+    return _canonical_components(
+        spark, d, "doc_id",
+        lambda s: llm_dedup_near(s, d).select("doc_a", "doc_b"),
+        lambda s: T(s, d, "documents").select("doc_id"), max_iter)
 
-    caller_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    iso = spark.newSession()
-    ensure_session_defaults(iso)
-    # newSession's fresh SQLConf falls back to the CONTEXT-level value,
-    # not the caller's runtime conf — carry the caller's setting over
-    # explicitly or a runtime-tuned session (conf.set(..., "2000") on a
-    # big run) would see its corpus-sized edge build silently
-    # under-parallelized at the context default (r16 review)
-    iso.conf.set("spark.sql.shuffle.partitions", caller_parts)
-    spark = iso
-    docs = T(spark, d, "documents").select("doc_id")
-    # the edge BUILD is corpus-sized — it runs at the caller's full
-    # parallelism and localCheckpoints once (r13: it previously ran
-    # under the loop's 8 shuffle partitions and re-planned from a
-    # cache; checkpointing truncates the near-dup join lineage so each
-    # CC round scans a short in-storage frame — 4.1 -> 2.8 s at sf0.1,
-    # and at 100 TB the edge join must never be throttled to 8)
-    edges = llm_dedup_near(spark, d).select("doc_a", "doc_b")
-    bidir, n_edges = _cc_bidir(edges)
-    _cc_loop_conf(iso, n_edges, caller_parts)
 
-    # only nodes with at least one dup edge can ever change label — the
-    # loop runs on the dup SUBGRAPH (a sliver of the corpus at 100 TB);
-    # every isolated doc is its own canonical id, attached at the end
-    # with one left join, outside the iteration entirely.
+def _canonical_components(spark, d, key: str, edges, nodes, max_iter: int):
+    """The one CC driver behind llm_dedup_clusters and
+    llm_dedup_embedding_lsh_canonical: (key, canonical_id, is_duplicate)
+    for every node of ``nodes(session)`` (one column, ``key``) over the
+    directed dup pairs ``edges(session)``, on a ``child_session``.  The
+    corpus-sized edge build runs at the caller's inherited parallelism
+    and checkpoints once (_cc_bidir); _cc_loop_conf then sizes the loop
+    from the edge count, since per-round task overhead, not data,
+    bounds CC on the tiny label frames.  The loop runs on the dup
+    SUBGRAPH only; afterwards the child gets its inherited confs back
+    and ONE corpus-sized left join attaches every isolated node as its
+    own canonical id."""
+    from ..session import INHERITED_CONFS, child_session
+
+    iso = child_session(spark)
+    inherited = {k: iso.conf.get(k) for k in INHERITED_CONFS}
+    bidir, n_edges = _cc_bidir(edges(iso))
+    _cc_loop_conf(iso, n_edges, inherited["spark.sql.shuffle.partitions"])
     labels = (_min_label_propagation(bidir, max_iter)
-              .withColumnRenamed("node", "doc_id"))
-    # (bidir's checkpoint blocks free when the frame goes out of scope)
-    # the closing attach join is corpus-sized — give it the caller's
-    # full parallelism, not the loop's 8 label partitions (iso is
-    # private, so this set races with nothing)
-    iso.conf.set("spark.sql.shuffle.partitions", caller_parts)
-    iso.conf.set("spark.sql.adaptive.enabled", "true")
-    return (docs.join(labels, "doc_id", "left")
-            .select("doc_id",
-                    F.coalesce("lbl", "doc_id").alias("canonical_id"),
-                    (F.coalesce("lbl", "doc_id") != F.col("doc_id"))
-                    .alias("is_duplicate")))
+              .withColumnRenamed("node", key))
+    for k, v in inherited.items():
+        iso.conf.set(k, v)
+    canonical = F.coalesce("lbl", key)
+    return (nodes(iso).join(labels, key, "left")
+            .select(key, canonical.alias("canonical_id"),
+                    (canonical != F.col(key)).alias("is_duplicate")))
 
 
 @register(
@@ -5416,11 +5395,11 @@ def llm_dedup_embedding_lsh_canonical(spark, d, max_iter: int = 20):
     verify) and localCheckpoints once so each CC round scans a short
     in-storage frame; the loop runs on the dup SUBGRAPH only (isolated
     vectors never enter it — attached by ONE closing left join), one
-    8-partition shuffle per round on frames that are O(dup vectors);
-    rounds = cluster diameter, and the star guard keeps hot buckets'
-    edges star-shaped (diameter 2) so mass-dup corpora CONVERGE FASTER.
-    The loop runs in a dedicated child session (own SQLConf) so the
-    caller's shuffle-partition conf is never touched.
+    shuffle per round on frames that are O(dup vectors); rounds =
+    cluster diameter, and the star guard keeps hot buckets' edges
+    star-shaped (diameter 2) so mass-dup corpora CONVERGE FASTER.  The
+    edge build and the loop run through :func:`_canonical_components`,
+    so the caller's conf is never touched.
 
     Oracle scope (r16 review): the SQL replay generates the GUARD-FREE
     candidate set — like llm_dedup_embedding_lsh's own oracle — so the
@@ -5431,34 +5410,16 @@ def llm_dedup_embedding_lsh_canonical(spark, d, max_iter: int = 20):
     edge loss documented on llm_dedup_embedding_lsh applies at CLUSTER
     granularity here (a dropped spoke-spoke edge can split a
     component); the star counters make it observable per run."""
-    from ..session import ensure_session_defaults
-
-    caller_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    iso = spark.newSession()
-    ensure_session_defaults(iso)
-    # carry the caller's runtime conf into the fresh SQLConf — the
-    # corpus-sized edge build must run at the caller's parallelism,
-    # not the context default (r16 review; the llm_dedup_clusters fix)
-    iso.conf.set("spark.sql.shuffle.partitions", caller_parts)
-    spark = iso
-    edges = llm_dedup_embedding_lsh(spark, d).select("vec_a", "vec_b")
-    bidir, n_edges = _cc_bidir(edges)
-    _cc_loop_conf(iso, n_edges, caller_parts)
-    labels = (_min_label_propagation(bidir, max_iter)
-              .withColumnRenamed("node", "vec_id"))
-    iso.conf.set("spark.sql.shuffle.partitions", caller_parts)
-    iso.conf.set("spark.sql.adaptive.enabled", "true")
-    nz = (T(spark, d, "embeddings")
-          .select("vec_id",
-                  F.col("embedding").cast("array<double>").alias("e"))
-          .filter(F.col("e").isNotNull())
-          .filter(F.exists("e", lambda x: x != 0))
-          .select("vec_id"))
-    return (nz.join(labels, "vec_id", "left")
-            .select("vec_id",
-                    F.coalesce("lbl", "vec_id").alias("canonical_id"),
-                    (F.coalesce("lbl", "vec_id") != F.col("vec_id"))
-                    .alias("is_duplicate")))
+    return _canonical_components(
+        spark, d, "vec_id",
+        lambda s: llm_dedup_embedding_lsh(s, d).select("vec_a", "vec_b"),
+        lambda s: (T(s, d, "embeddings")
+                   .select("vec_id", F.col("embedding")
+                           .cast("array<double>").alias("e"))
+                   .filter(F.col("e").isNotNull())
+                   .filter(F.exists("e", lambda x: x != 0))
+                   .select("vec_id")),
+        max_iter)
 
 
 @register(

@@ -17,9 +17,8 @@ import pyspark.sql.functions as F
 
 from ..plans.registry import register
 from ..scratch import scratch_dir
+from ..sources import FIXTURE_DIR
 from ._util import T
-
-FIXTURE_DIR = "/root/repo/tests/fixtures"
 
 
 # ---------------------------------------------------------------- B-scan
@@ -1161,15 +1160,11 @@ def _reordered_csv_files(spark) -> str:
     import gzip
     import os
 
-    from ..scratch import scratch_dir
-    from ..tables.queries import FIXTURE
-
     tpl = _CSV_REORDER_TPL.get("pedidos")
     if tpl is not None and os.path.isdir(tpl):
         return tpl
     tpl = scratch_dir("csv_reorder_")
-    opener = gzip.open if FIXTURE.endswith(".gz") else open
-    with opener(FIXTURE, "rt") as f:
+    with gzip.open(f"{FIXTURE_DIR}/pedidos.csv.gz", "rt") as f:
         rows = list(csv.DictReader(f, delimiter=";"))
     orders = {
         "a.csv": ["id_pedido", "produto", "valor_unitario", "quantidade",

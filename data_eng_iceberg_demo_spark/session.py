@@ -56,6 +56,29 @@ def ensure_session_defaults(spark: SparkSession) -> None:
                     f"from the oracle (timestamp casts / nanos reads)")
 
 
+# Runtime confs a child session takes from its caller: newSession falls
+# back to the CONTEXT-level values, so a runtime-tuned caller would
+# otherwise see its query silently run at the context default.
+INHERITED_CONFS = ("spark.sql.shuffle.partitions",
+                   "spark.sql.adaptive.enabled")
+
+
+def child_session(spark: SparkSession,
+                  overrides: dict[str, str] | None = None) -> SparkSession:
+    """The one way a query scopes a conf: a child of ``spark`` (shared
+    SparkContext, catalog and cache; own SQLConf) with SESSION_DEFAULTS,
+    the caller's INHERITED_CONFS, then ``overrides``.  The caller's
+    session is never touched, so a query planned concurrently on it
+    never compiles under an override."""
+    child = spark.newSession()
+    ensure_session_defaults(child)
+    for k in INHERITED_CONFS:
+        child.conf.set(k, spark.conf.get(k))
+    for k, v in (overrides or {}).items():
+        child.conf.set(k, v)
+    return child
+
+
 def get_spark(app_name: str = "data-eng-iceberg-demo-spark",
               shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")

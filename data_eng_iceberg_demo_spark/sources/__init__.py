@@ -1,1 +1,2 @@
-from .readers import TABLES, load, load_all, read_csv, read_json_lines  # noqa: F401
+from .readers import (FIXTURE_DIR, TABLES, load, load_all,  # noqa: F401
+                      normalize_events_ts, read_csv, read_json_lines)

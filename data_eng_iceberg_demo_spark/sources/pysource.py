@@ -255,24 +255,35 @@ def stream_python_datasource(spark, d):
     micro-batches must equal the batch scan of the same index range —
     the oracle replays the counter function in SQL, so the offset
     bookkeeping (no gap, no overlap, stop at end) is what's actually
-    under test.  The query runs on a tight micro-batch trigger;
-    processAllAvailable() returns once the source's offset stops
-    advancing (end-of-data), then the query stops."""
-    import uuid as _uuid
-
+    under test.  It drains through :func:`_drain_to_memory`."""
     with _pinned_session(spark, SyntheticEventsSource) as sess:
         stream = (sess.readStream.format("synthetic_events")
                   .option("rows", "300").option("batch_rows", "150").load())
-        qname = f"py_stream_{_uuid.uuid4().hex[:8]}"
-        q = (stream.writeStream.format("memory").queryName(qname)
-             .outputMode("append").trigger(processingTime="0 seconds").start())
-        try:
-            # drains every micro-batch; returns once the source's offset
-            # stops advancing (read() reports end-of-data)
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return sess.table(qname)
+        return _drain_to_memory(sess, stream, "py_stream")
+
+
+def _drain_to_memory(sess, stream, prefix: str):
+    """Drain a Python-source ``stream`` (built on ``sess``) into a memory
+    sink and return the sink's table: a tight processingTime trigger,
+    then processAllAvailable(), which returns once the source's offset
+    stops advancing (read() reports end-of-data), then stop.
+
+    Not the file streams' availableNow runner (streaming.harness
+    ._run_stream): on pyspark 4.1.2 an availableNow trigger over these
+    sources ran only the first micro-batch — 150 of
+    stream_python_datasource's 300 rows and 300 of stream_avro_python's
+    600 — while this form drains every batch ([150, 150] and
+    [300, 300] rows per batch)."""
+    import uuid as _uuid
+
+    qname = f"{prefix}_{_uuid.uuid4().hex[:8]}"
+    q = (stream.writeStream.format("memory").queryName(qname)
+         .outputMode("append").trigger(processingTime="0 seconds").start())
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return sess.table(qname)
 
 
 class _CsvCommit(WriterCommitMessage):
@@ -647,8 +658,6 @@ def stream_avro_python(spark, d):
     block-as-offset scheme is how a production tailer follows a
     growing container: new blocks appended after the sync marker
     become new offsets with no rewind."""
-    import uuid as _uuid
-
     if not _PYAVRO_CLS:
         from .avro_py import make_source
 
@@ -658,15 +667,7 @@ def stream_avro_python(spark, d):
         stream = (sess.readStream.format("pyavro")
                   .option("path", path)
                   .option("maxBlocksPerTrigger", "3").load())
-        qname = f"avro_stream_{_uuid.uuid4().hex[:8]}"
-        q = (stream.writeStream.format("memory").queryName(qname)
-             .outputMode("append").trigger(processingTime="0 seconds")
-             .start())
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return sess.table(qname)
+        return _drain_to_memory(sess, stream, "avro_stream")
 
 
 # ------------------------------------------- avro logical-types roundtrip

@@ -12,7 +12,15 @@ DataFrame reaches the scan as ``PushedFilters``.  Never collect here.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
+
+# The committed fixtures (pedidos CSV, events_sample JSON-lines), found
+# from the package's own location so a copy of the repo reads its own.
+FIXTURE_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(
+        __file__)))), "tests", "fixtures")
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -21,33 +29,33 @@ TABLES = (
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table (columnar, pushdown-capable scan).
-
-    events.ts has shipped in two parquet encodings across fixture
-    generations: TIMESTAMP(NANOS), which Spark reads only as int64 nanos
-    (spark.sql.legacy.parquet.nanosAsLong), and naive TIMESTAMP(MICROS),
-    which Spark reads as TIMESTAMP_NTZ.  Normalize both to a plain
-    TimestampType column so every consumer sees one type.  The session
-    timezone is pinned to UTC (ensure_session_defaults), so the NTZ→TZ
-    cast is wall-clock-preserving and matches the naive DuckDB oracle.
-    """
-    import pyspark.sql.functions as F
-    from pyspark.sql.types import LongType, TimestampNTZType
-
+    """Read one fixture table (columnar, pushdown-capable scan); events.ts
+    comes out as a plain TimestampType (:func:`normalize_events_ts`)."""
     # Without the nanosAsLong conf a caller-provided session (not built by
     # session.get_spark) fails a NANOS scan outright with
-    # PARQUET_TYPE_ILLEGAL before the LongType fallback below can run.
-    # load() is also a public entry point outside the registry wrapper, so
-    # it applies the defaults itself.
+    # PARQUET_TYPE_ILLEGAL before the int64 fallback can run.  load() is
+    # also a public entry point outside the registry wrapper, so it
+    # applies the defaults itself.
     from ..session import ensure_session_defaults
     ensure_session_defaults(spark)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(ts_type, TimestampNTZType):
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return normalize_events_ts(df) if name == "events" else df
+
+
+def normalize_events_ts(df: DataFrame) -> DataFrame:
+    """The one events.ts rule, for batch reads and streams alike: the
+    column has shipped as TIMESTAMP(NANOS), which Spark reads only as
+    int64 nanos (spark.sql.legacy.parquet.nanosAsLong), and as naive
+    TIMESTAMP(MICROS), read as TIMESTAMP_NTZ; both become TimestampType.
+    The session timezone is UTC (ensure_session_defaults), so the NTZ
+    cast keeps wall-clock time and matches the naive DuckDB oracle."""
+    import pyspark.sql.functions as F
+
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 

@@ -91,7 +91,7 @@ def _ts_to_us(tbl):
     """(int64-µs ndarray, valid-mask ndarray) for the fixture ``ts``
     column, normalizing the two encodings the fixtures have shipped
     (TIMESTAMP(NANOS) read as int64 nanos; naive TIMESTAMP(MICROS)) —
-    the same normalization sources.readers.load performs engine-side."""
+    the same rule sources.normalize_events_ts applies engine-side."""
     import numpy as np
     import pyarrow as pa
 
@@ -194,18 +194,15 @@ def _state_session(spark, src: str):
     count bounds the key count from above — keyed dedup holds one key
     per ``event_id``, 10,000 at sf0.01 and 100,000 at sf0.1.  A
     checkpointed stream keeps the count it started with: Spark restores
-    it from the offset log on restart.  A dedicated ``newSession``
-    (shared SparkContext, own SQLConf) keeps the override invisible to
-    the caller — the set/restore form left a window where a concurrently
-    planned query compiled under the stream's partition count."""
-    from ..session import ensure_session_defaults
+    it from the offset log on restart.  The count is a
+    ``session.child_session`` override, so the caller never sees it —
+    the set/restore form left a window where a concurrently planned
+    query compiled under the stream's partition count."""
+    from ..session import child_session
 
-    iso = spark.newSession()
-    ensure_session_defaults(iso)
     n = _state_partitions(_footer_rows(src),
                           spark.sparkContext.defaultParallelism)
-    iso.conf.set("spark.sql.shuffle.partitions", str(n))
-    return iso
+    return child_session(spark, {"spark.sql.shuffle.partitions": str(n)})
 
 
 def _run_stream(iso, df, mode: str = "append", name: str = "stream"):
@@ -244,31 +241,24 @@ def _raw_schema(spark, path: str):
 
 def _events_stream(spark, d, path=None, max_files=None):
     """readStream over the events parquet (schema from a batch peek of the
-    raw file, cached per dir — ts arrives as int64 nanos, converted to µs
-    timestamp).  The file source wants a flat directory of files, so the
-    fixture (single file, or the member part files of a directory-shaped
-    corpus) is symlinked into a scratch dir."""
+    raw file, cached per dir; ts normalized by
+    ``sources.normalize_events_ts``).  The file source wants a flat
+    directory of files, so the fixture (single file, or the member part
+    files of a directory-shaped corpus) is symlinked into a scratch
+    dir."""
     if path is None:
         path = _events_src(d)
     # ts may be TIMESTAMP(NANOS) in the fixture parquet; a session that
     # didn't set nanosAsLong at build time would otherwise fail this batch
     # schema peek with PARQUET_TYPE_ILLEGAL (reachable outside the registry
-    # wrapper via run_stream_to_df, so applied here too).  Newer fixtures
-    # carry naive TIMESTAMP(MICROS) → TIMESTAMP_NTZ; normalize both to
-    # TimestampType like sources.readers.load does.
+    # wrapper via run_stream_to_df, so applied here too).
     from ..session import ensure_session_defaults
+    from ..sources import normalize_events_ts
     ensure_session_defaults(spark)
     reader = spark.readStream.schema(_raw_schema(spark, path))
     if max_files is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files))
-    stream = reader.parquet(path)
-    ts_type = dict(stream.dtypes).get("ts")
-    if ts_type == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return normalize_events_ts(reader.parquet(path))
 
 
 def _events_plus(spark, d, tag: str, extra_build) -> str:

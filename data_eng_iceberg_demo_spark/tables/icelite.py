@@ -34,8 +34,9 @@ is insufficient, SURVEY.md §7.4).
 
 Change paths: every row change, delete file, snapshot and pointer
 write goes through one primitive each.  _publish alone rewrites the
-pointer file after create_table, and alone applies the conflict rule:
-the pointer's metadata_version must still be the base's.
+pointer file after create_table.  _claimed alone applies the conflict
+rule — hold the commit marker while the pointer's metadata_version is
+still the base's — for _publish and for the manifest sweep.
 _commit_snapshot alone appends a snapshot, on main or on a branch.
 _carry_over returns the files and pruned delete entries that survive a
 file rewrite.  _write_position_deletes masks matched (file, pos) rows
@@ -57,6 +58,7 @@ so read-amplification is reclaimable exactly as in Iceberg.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -570,72 +572,72 @@ class IceliteTable:
     # reclaimable (tests shrink this to exercise the path)
     STALE_MARKER_SECONDS = 300.0
 
-    def _claim_marker(self, marker: str, sid: int) -> None:
-        try:
-            os.close(os.open(marker,
-                             os.O_CREAT | os.O_EXCL | os.O_WRONLY))
-            return
-        except FileExistsError:
-            pass
-        # Another publish holds the marker (young -> genuine conflict) or
-        # died before releasing it (stale -> reclaim, otherwise every
-        # future same-base publish hits EEXIST forever — the hard-kill
-        # wedge from the r3 advice).
-        try:
-            age = time.time() - os.path.getmtime(marker)
-        except OSError:
-            age = None  # vanished: its owner just released it
-        if age is not None and age < self.STALE_MARKER_SECONDS:
-            raise CommitConflict(
-                f"snapshot {sid} already claimed by a concurrent writer")
-        try:
-            os.unlink(marker)
-        except OSError:
-            pass
-        # one retry after the reclaim; a racing reclaimer losing here is
-        # a genuine conflict
-        try:
-            os.close(os.open(marker,
-                             os.O_CREAT | os.O_EXCL | os.O_WRONLY))
-        except FileExistsError:
-            raise CommitConflict(
-                f"snapshot {sid} re-claimed while reclaiming a stale "
-                f"marker") from None
-
-    def _publish(self, meta: dict, sid: int | None = None) -> None:
-        """Swap the pointer file to `meta` — the only pointer write after
-        create_table, so every operation shares Iceberg's commit rule:
-        swap only if the base did not move.  It claims
-        `.commits/commit-<sid>` (sid: the base's next snapshot id, by
-        default one past the highest in `meta`), so same-base writers
-        race for one O_CREAT|O_EXCL name; then checks the on-disk
-        metadata_version (absent = 0) still equals `meta`'s, else
-        CommitConflict; then writes `meta` with the version bumped, and
-        always releases the marker.  Every publish bumps the version, so
-        any change since the base read conflicts, a manifest re-encoding
-        included.  Claiming before checking makes the release safe: a
-        same-base writer claiming after the release sees the bump."""
-        if sid is None:
-            sid = max((s["id"] for s in meta["snapshots"]), default=0) + 1
+    @contextlib.contextmanager
+    def _claimed(self, base: int, sid: int):
+        """Hold `.commits/commit-<sid>` while the on-disk pointer's
+        metadata_version (absent = 0) is still `base`, else raise
+        CommitConflict.  Writers from one base race for one
+        O_CREAT|O_EXCL name, and claiming before the check makes the
+        release safe: a same-base writer claiming after the release sees
+        any bump made under the claim."""
         markers = os.path.join(self.tdir, ".commits")
         os.makedirs(markers, exist_ok=True)
         marker = os.path.join(markers, f"commit-{sid}")
-        self._claim_marker(marker, sid)
+
+        def claim() -> bool:
+            try:
+                os.close(os.open(marker,
+                                 os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+                return True
+            except FileExistsError:
+                return False
+
+        if not claim():
+            # Another publish holds the marker (young -> genuine conflict)
+            # or died before releasing it (stale -> reclaim, otherwise
+            # every future same-base publish hits EEXIST forever).
+            try:
+                age = time.time() - os.path.getmtime(marker)
+            except OSError:
+                age = None  # vanished: its owner just released it
+            if age is not None and age < self.STALE_MARKER_SECONDS:
+                raise CommitConflict(
+                    f"snapshot {sid} already claimed by a concurrent writer")
+            with contextlib.suppress(OSError):
+                os.unlink(marker)
+            # one retry after the reclaim; a racing reclaimer winning
+            # here is a genuine conflict
+            if not claim():
+                raise CommitConflict(
+                    f"snapshot {sid} re-claimed while reclaiming a stale "
+                    f"marker")
         try:
             with open(os.path.join(self.tdir, _META)) as f:
                 on_disk = json.load(f).get("metadata_version", 0)
-            base = meta.get("metadata_version", 0)
             if on_disk != base:
                 raise CommitConflict(
                     f"table metadata moved from version {base} to "
                     f"{on_disk} while this operation was in flight")
+            yield
+        finally:
+            with contextlib.suppress(OSError):
+                os.unlink(marker)
+
+    def _publish(self, meta: dict, sid: int | None = None) -> None:
+        """Swap the pointer file to `meta` — the only pointer write after
+        create_table, so every operation shares Iceberg's commit rule:
+        swap only if the base did not move.  Under `_claimed` (sid: the
+        base's next snapshot id, by default one past the highest in
+        `meta`; base: `meta`'s metadata_version) it writes `meta` with
+        the version bumped.  Every publish bumps the version, so any
+        change since the base read conflicts, a manifest re-encoding
+        included."""
+        if sid is None:
+            sid = max((s["id"] for s in meta["snapshots"]), default=0) + 1
+        base = meta.get("metadata_version", 0)
+        with self._claimed(base, sid):
             meta["metadata_version"] = base + 1
             _write_meta(self.tdir, meta)
-        finally:
-            try:
-                os.unlink(marker)
-            except OSError:
-                pass
 
     def _commit_snapshot(self, meta: dict, operation: str, files: list[dict],
                          delete_files: list[dict] | None = None,
@@ -1607,15 +1609,19 @@ class IceliteTable:
         """Delete manifest files referenced by no snapshot header in the
         CURRENT pointer file — debris from expired snapshots and from
         survivors that _write_meta re-encoded onto a full manifest when
-        their delta base expired.  Safe any time: the pointer swap is
-        the publish point, so an unreferenced manifest is unreachable."""
+        their delta base expired.  A publish writes its manifests before
+        its pointer swap, so the sweep holds the marker a publish from
+        the current pointer would (`_claimed`) and skips the round when
+        a publish is in flight, instead of deleting its manifests."""
         with open(os.path.join(self.tdir, _META)) as f:
-            live = {h.get("manifest")
-                    for h in json.load(f).get("snapshots", [])}
+            heads = json.load(f)
+        sid = max((h["id"] for h in heads["snapshots"]), default=0) + 1
         mdir = os.path.join(self.tdir, _MANIFEST_DIR)
         removed = []
-        if os.path.isdir(mdir):
-            for n in os.listdir(mdir):
+        with contextlib.suppress(CommitConflict), \
+                self._claimed(heads.get("metadata_version", 0), sid):
+            live = {h.get("manifest") for h in heads["snapshots"]}
+            for n in os.listdir(mdir) if os.path.isdir(mdir) else ():
                 if n not in live:
                     os.remove(os.path.join(mdir, n))
                     removed.append(os.path.join(_MANIFEST_DIR, n))

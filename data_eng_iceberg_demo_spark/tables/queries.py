@@ -17,9 +17,10 @@ from pyspark.sql.types import (DecimalType, IntegerType, LongType, StringType,
 
 from ..plans.registry import register
 from ..scratch import scratch_dir
+from ..sources import FIXTURE_DIR
 from .icelite import IceliteCatalog
 
-FIXTURE = "/root/repo/tests/fixtures/pedidos.csv.gz"
+FIXTURE = f"{FIXTURE_DIR}/pedidos.csv.gz"
 
 PEDIDOS_SCHEMA = StructType([
     StructField("id_pedido", StringType()),

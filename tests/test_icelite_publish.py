@@ -154,3 +154,29 @@ def test_only_publish_and_create_table_write_the_pointer():
                     and getattr(node.func, "id", None) == "_write_meta"):
                 writers.add(fn.name)
     assert writers == {"_publish", "create_table"}
+
+
+def test_manifest_sweep_spares_an_in_flight_publish(
+        spark, template, tmp_path, monkeypatch):
+    """Another handle's manifest sweep runs between a publish's manifest
+    write and its pointer swap.  The publish holds the commit marker, so
+    the sweep skips that round instead of deleting the manifest about to
+    be published, and the new head still decodes."""
+    t = _copy(spark, template, tmp_path)
+    sweeper = IceliteTable(spark, t.tdir)
+    swap = os.replace
+    swept = []
+
+    def replace(src, dst):
+        if os.path.basename(dst) == icelite._META and not swept:
+            swept.append(sweeper._gc_manifests())
+        swap(src, dst)
+
+    monkeypatch.setattr(icelite.os, "replace", replace)
+    sid = t._append(t.meta, [])["id"]
+    monkeypatch.undo()
+    assert swept == [[]]
+    head = IceliteTable(spark, t.tdir)
+    assert head.meta["current_snapshot"] == sid
+    assert head.read().count() == 1
+    assert _markers(t) == []
